@@ -277,7 +277,9 @@ def test_auto_bucketize_above_threshold(spark):
     defaulted call must auto-route to the persist-chain big-graph path
     (the blocked localCheckpoint loop OOMed a 157M-edge CC run — its
     state copies outlive the ContextCleaner's GC race) and stay
-    value-identical. Explicit ``local_mode=True`` still wins."""
+    value-identical. Forbidding the local kernel (``local_mode=False``)
+    or choosing a ``block_size`` must not keep a big graph off that tier
+    either; only an explicit ``local_mode=True`` wins."""
     import pytest as _pytest
 
     from tests.conftest import NINE, edge_df
@@ -288,11 +290,21 @@ def test_auto_bucketize_above_threshold(spark):
     )
 
     edges = edge_df(spark, NINE)
+    calls = {
+        "cc": (connected_components, "component"),
+        "lpa": (label_propagation, "label"),
+        "pr": (pagerank, "rank"),
+    }
+    variants = ({}, {"local_mode": False}, {"block_size": 4})
+    got = {}
     spark.conf.set("wga.bucketizeMinEdges", "1")
     try:
-        cc = {r.vertex: r.component for r in connected_components(edges).collect()}
-        lp = {r.vertex: r.label for r in label_propagation(edges).collect()}
-        pr = {r.vertex: r.rank for r in pagerank(edges).collect()}
+        for name, (fn, col) in calls.items():
+            for i, kw in enumerate(variants):
+                st: dict = {}
+                rows = fn(edges, stats=st, **kw).collect()
+                got[name, i] = {r.vertex: r[col] for r in rows}
+                assert st["tier"] == "persist-chain", (name, kw)
         forced_local = {
             r.vertex: r.component
             for r in connected_components(edges, local_mode=True).collect()
@@ -302,11 +314,14 @@ def test_auto_bucketize_above_threshold(spark):
     want_cc = {r.vertex: r.component for r in connected_components(edges).collect()}
     want_lp = {r.vertex: r.label for r in label_propagation(edges).collect()}
     want_pr = {r.vertex: r.rank for r in pagerank(edges).collect()}
-    assert cc == want_cc and forced_local == want_cc
-    assert lp == want_lp
-    assert set(pr) == set(want_pr)
-    for v in pr:
-        assert pr[v] == _pytest.approx(want_pr[v], abs=1e-12)
+    assert forced_local == want_cc
+    for i in range(len(variants)):
+        assert got["cc", i] == want_cc
+        assert got["lpa", i] == want_lp
+        pr = got["pr", i]
+        assert set(pr) == set(want_pr)
+        for v in pr:
+            assert pr[v] == _pytest.approx(want_pr[v], abs=1e-12)
 
 
 def test_deep_chain_bounded_plans(spark):

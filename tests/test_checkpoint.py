@@ -110,3 +110,48 @@ def test_cc_resume_on_chain_path(spark, tmp_path):
     # ordinary loop
     assert st1["bucketized"] and st2["bucketized"]
     assert resumed == full
+
+
+@pytest.mark.parametrize("op", ["pagerank", "cc"])
+def test_resume_after_convergence_runs_no_superstep(spark, tmp_path, op):
+    """A resumed run replays the recorded stop rule before stepping: once
+    the last snapshot has converged, a new call with the same manager
+    returns that result, runs no superstep and commits no snapshot."""
+    edges = edge_df(spark, ARCS)
+    if op == "pagerank":
+        def run(**kw):
+            return _ranks(pagerank(edges, tol=1e-9, max_iter=300, **kw))
+        metric = "residual"
+    else:
+        def run(**kw):
+            return {
+                r["vertex"]: r["component"]
+                for r in connected_components(edges, **kw).collect()
+            }
+        metric = "changed"
+    cp = CheckpointManager(str(tmp_path), op)
+    st1: dict = {}
+    first = run(checkpoint=cp, stats=st1)
+    committed = sorted(os.listdir(cp.base))
+    last = cp.latest(spark)[1]
+    assert st1["iterations"] == last.iteration + 1
+
+    st2: dict = {}
+    again = run(checkpoint=cp, stats=st2)
+    assert again == first
+    assert st2["iterations"] == 0
+    assert st2[metric] == last.metrics[metric]
+    assert sorted(os.listdir(cp.base)) == committed
+
+
+def test_resume_at_max_iter_reports_snapshot_metric(spark, tmp_path):
+    """A resume whose snapshot already reached ``max_iter`` runs nothing
+    and reports the snapshot's residual, not an unset one."""
+    edges = edge_df(spark, ARCS)
+    cp = CheckpointManager(str(tmp_path), "pagerank")
+    pagerank(edges, tol=1e-9, max_iter=3, checkpoint=cp)
+    stats: dict = {}
+    pagerank(edges, tol=1e-9, max_iter=3, checkpoint=cp, stats=stats)
+    assert stats["iterations"] == 0
+    assert stats["residual"] == cp.latest(spark)[1].metrics["residual"]
+    assert cp.latest(spark)[1].iteration == 2

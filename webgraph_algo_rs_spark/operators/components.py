@@ -22,21 +22,62 @@ absorbed via ``least(old_label, …)``.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from webgraph_algo_rs_spark.checkpoint import CheckpointManager
+from webgraph_algo_rs_spark.plans.fixpoint import Fixpoint
+from webgraph_algo_rs_spark.plans.local_csr import cc_kernel
 from webgraph_algo_rs_spark.plans.superstep import (
     SRC,
     DST,
-    PersistChain,
-    pin_edges,
     graph_vertices,
-    materialize,
     symmetrize,
 )
+
+
+class _Components(Fixpoint):
+    algo = "cc"
+    schema = "vertex bigint, component bigint"
+    output = "component"
+    carried = ("label", "changed")
+    metric = "changed"
+    with_weight = False
+
+    def kernel(self, max_iter):
+        return cc_kernel(max_iter)
+
+    def prepare(self, edges, n_edges):
+        # the pin probe counts the raw scan, not the symmetrize plan:
+        # limit() cannot short-circuit through symmetrize's groupBy, and
+        # the ≤2× raw undercount only shifts a near-threshold pick onto
+        # the spill-safe cached store
+        self.edges = self.pin(symmetrize(edges).select(SRC, DST), probe_df=edges)
+        return graph_vertices(self.edges).select(
+            "vertex", F.col("vertex").alias("label"), F.lit(True).alias("changed")
+        )
+
+    def step(self, cur, j, prev):
+        label, changed = F.col(f"label{j - 1}"), F.col(f"changed{j - 1}")
+        msgs = (  # delta frontier: only last round's changed vertices scatter
+            cur.filter(changed)
+            .select(F.col("vertex").alias("__v"), label.alias("__l"))
+            .join(self.edges, F.col("__v") == F.col(SRC))
+            .groupBy(DST)
+            .agg(F.min("__l").alias("__nl"))
+        )
+        nl = F.coalesce(F.col("__nl"), label)
+        return cur.join(msgs, F.col("vertex") == F.col(DST), "left").select(
+            *cur.columns,
+            F.least(label, nl).alias(f"label{j}"),
+            (nl < label).alias(f"changed{j}"),
+        )
+
+    def aggregates(self, j):
+        return {"changed": F.sum(F.col(f"changed{j}").cast("long"))}
+
+    def converged(self, metrics):
+        return metrics["changed"] == 0
 
 
 def connected_components(
@@ -51,277 +92,22 @@ def connected_components(
 ) -> DataFrame:
     """Returns ``(vertex:bigint, component:bigint)`` on the symmetrized graph.
 
-    ``bucketize_edges``: big-graph path — pin the symmetrized arcs on
-    ``src`` once (block-manager cache / bucketed table / auto — see
-    ``pin_edges``; ``edge_store`` selects) so each superstep shuffles
-    only labels.
-    ``block_size``: min-supersteps chained per Spark action (the
-    PageRank blocked-loop pattern, `pagerank.py:233-336` — per-round
-    driver latency dominates the small-graph path at ~50 supersteps ×
-    ~50 ms); default 4 when unset; clamped to 1 when ``checkpoint``
-    (per-iteration durability is the point) or ``bucketize_edges``
-    (persist-chain path) is given. The stop rule — first superstep with
-    zero label changes — is evaluated per chained step from the block's
-    carried columns, so the result is bit-identical to the per-step loop.
-    ``local_mode``: ``True`` forces the partition-local CSR kernel
-    (``plans/local_csr.py``), ``False`` forbids it, ``None`` auto-picks
-    it under ``wga.localKernelMaxEdges`` edges when no explicit
-    strategy (checkpoint / bucketize / block_size) was requested.
+    Tiers, ``bucketize_edges``, ``block_size`` (hash-min supersteps
+    chained per Spark action; the delta frontier rides along as the
+    ``changed`` columns), ``local_mode``, ``checkpoint`` and ``stats``
+    are the fixpoint driver's (``plans/fixpoint.py``); the stop rule is
+    the first superstep with zero label changes. ``stats`` also records
+    ``bucketized`` (the persist-chain tier ran). ``edge_store`` selects
+    the pinned edge store on the persist-chain tier (``pin_edges``).
     Exact: min-label exchange is ordering-insensitive integer math.
     """
-    spark = edges.sparkSession
-    if local_mode and (checkpoint is not None or bucketize_edges):
-        # an explicit force must not be silently overridden (the other
-        # strategies demand a different physical plan): the local kernel
-        # runs the whole loop inside one task, so per-iteration durable
-        # checkpoints / pinned edge buckets cannot apply to it
-        raise ValueError(
-            "local_mode=True cannot be combined with "
-            + ("checkpoint" if checkpoint is not None else "bucketize_edges")
-        )
-    if (
-        not bucketize_edges
-        and local_mode is not False
-        and (local_mode or block_size is None)
-    ):
-        from webgraph_algo_rs_spark.plans.local_csr import (
-            bucketize_min_edges,
-            cc_kernel,
-            local_kernel_threshold,
-            probe_edge_count,
-            run_local_kernel,
-        )
-
-        thr = local_kernel_threshold(spark)
-        big_thr = bucketize_min_edges(spark)
-        n_edges = probe_edge_count(edges, max(thr, big_thr))
-        if n_edges == 0 and checkpoint is None:
-            if stats is not None:
-                stats.update(iterations=0, changed=0)
-            return spark.createDataFrame([], "vertex bigint, component bigint")
-        if not local_mode and n_edges > big_thr:
-            # size dispatch, upper end: above wga.bucketizeMinEdges the
-            # blocked localCheckpoint loop accumulates state copies
-            # faster than the ContextCleaner frees them (157M-edge OOM,
-            # round 4) — auto-route to the persist-chain big-graph path.
-            # Applies to checkpointed runs too: per-iteration durability
-            # must not silently demote a huge graph onto the
-            # materialize-per-step loop that OOMs at this scale.
-            bucketize_edges = True
-        elif checkpoint is None and (local_mode or n_edges <= thr):
-            out = run_local_kernel(
-                edges,
-                "vertex bigint, component bigint, iterations int, changed bigint",
-                cc_kernel(max_iter),
-                with_weight=False,
-            )
-            if stats is not None:
-                head = out.select("iterations", "changed").first()
-                stats.update(
-                    iterations=int(head["iterations"]),
-                    changed=int(head["changed"]),
-                    tier="local-csr",
-                )
-            return out.select("vertex", "component")
-
-    if stats is not None:
-        stats["tier"] = "persist-chain" if bucketize_edges else "blocked"
-    if block_size is None:
-        block_size = 4
-    sym_plan = symmetrize(edges).select(SRC, DST)
-    drop_bucketed = None
-    if bucketize_edges:
-        # probe the raw scan, not the symmetrize plan: limit() cannot
-        # short-circuit through symmetrize's groupBy, so probing the
-        # plan itself would pay a full extra shuffle of the edge table
-        # just to pick the store. The raw count undercounts the
-        # symmetrized table by at most 2× — a cached pick near the
-        # threshold still lands on MEMORY_AND_DISK, which spills.
-        sym, drop_bucketed = pin_edges(
-            sym_plan, SRC, table_name="wga_cc_edges", store=edge_store,
-            probe_df=edges,
-        )
-    else:
-        sym = materialize(sym_plan)
-
-    history: list[dict] = []
-    start_iter = 0
-    state = None
-    if checkpoint is not None:
-        resumed = checkpoint.latest(spark)
-        if resumed is not None:
-            df, snap = resumed
-            state = materialize(df.select("vertex", "label", "changed"))
-            start_iter = snap.iteration + 1
-            history = list(snap.history)
-    if state is None:
-        state = materialize(
-            graph_vertices(sym).select(
-                "vertex", F.col("vertex").alias("label"), F.lit(True).alias("changed")
-            )
-        )
-
-    if checkpoint is None and not bucketize_edges and block_size > 1:
-        state, iters, changed = _blocked_cc_loop(
-            state, sym, max_iter, block_size, history, start_iter
-        )
-        if stats is not None:
-            stats.update(iterations=iters - start_iter, changed=changed)
-        return state.select("vertex", F.col("label").alias("component"))
-
-    chain = None
-    if bucketize_edges:
-        # big-graph memory discipline: persist-chain with explicit
-        # handle rotation — exactly two live state copies, vs the
-        # materialize-per-step loop whose localCheckpoint copies the
-        # ContextCleaner must GC-race to free (it loses at 10⁸ edges)
-        chain = PersistChain(
-            "vertex", int(spark.conf.get("spark.sql.shuffle.partitions"))
-        )
-        state = chain.seed(state)
-
-    changed = 1
-    it = start_iter
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        frontier = state.filter("changed")  # delta frontier: systolic scatter
-        msgs = (
-            frontier.join(sym, frontier.vertex == sym[SRC])
-            .groupBy(DST)
-            .agg(F.min("label").alias("nl"))
-        )
-        stepped_plan = state.join(msgs, state.vertex == msgs[DST], "left").select(
-            "vertex",
-            F.least("label", F.coalesce("nl", "label")).alias("label"),
-            (F.coalesce("nl", "label") < F.col("label")).alias("changed"),
-        )
-        stepped = (
-            chain.stage(stepped_plan, it - start_iter)
-            if chain is not None
-            else materialize(stepped_plan)
-        )
-        changed = stepped.filter("changed").count()
-        if chain is not None:
-            chain.advance(stepped)
-        state = stepped
-        metrics = {
-            "algo": "cc",
-            "iteration": it,
-            "changed": changed,
-            "wall_ms": int((time.time() - t0) * 1000),
-        }
-        history.append(metrics)
-        if checkpoint is not None and checkpoint.should_save(it):
-            checkpoint.save(state, it, metrics, history)
-        if changed == 0:
-            break
-
-    if stats is not None:
-        stats.update(
-            iterations=it + 1 - start_iter,
-            changed=changed,
-            bucketized=bool(bucketize_edges),
-        )
-    result = state.select("vertex", F.col("label").alias("component"))
-    if chain is not None:
-        # pins the result off the persist chain AND off the scratch
-        # edge table (a later run may overwrite it)
-        result = chain.finish(result)
-    if drop_bucketed is not None:
-        drop_bucketed()
-    return result
-
-
-def _blocked_cc_loop(
-    state: DataFrame,
-    sym: DataFrame,
-    max_iter: int,
-    k: int,
-    history: list[dict],
-    start_iter: int,
-) -> tuple[DataFrame, int, int]:
-    """Chain ``k`` hash-min supersteps per Spark action with carried
-    ``l0..lk`` / ``c0..ck`` columns (the delta frontier rides along as
-    the ``c`` flags: step *j* scatters only vertices with ``c(j-1)``).
-    Returns ``(state(vertex,label,changed), iterations, last_changed)``.
-    """
-    done = start_iter
-    stop = False
-    changed_last = -1
-    cur = state.select(
-        "vertex", F.col("label").alias("l0"), F.col("changed").alias("c0")
+    fp = _Components(edge_store)
+    out = fp.run(
+        edges, max_iter, checkpoint, stats, bucketize_edges, block_size, local_mode
     )
-    while not stop and done < max_iter:
-        steps = min(k, max_iter - done)
-        t0 = time.time()
-        for j in range(1, steps + 1):
-            lp, cp = f"l{j - 1}", f"c{j - 1}"
-            msgs = (
-                cur.filter(F.col(cp))
-                .select(F.col("vertex").alias("__v"), F.col(lp).alias("__l"))
-                .join(sym, F.col("__v") == F.col(SRC))
-                .groupBy(DST)
-                .agg(F.min("__l").alias("__nl"))
-            )
-            a, b = f"__s{j}", f"__m{j}"
-            cur = (
-                cur.alias(a)
-                .join(
-                    msgs.alias(b),
-                    F.col(f"{a}.vertex") == F.col(f"{b}.{DST}"),
-                    "left",
-                )
-                .select(
-                    *[F.col(f"{a}.{c}") for c in cur.columns],
-                    F.least(
-                        F.col(f"{a}.{lp}"),
-                        F.coalesce(F.col(f"{b}.__nl"), F.col(f"{a}.{lp}")),
-                    ).alias(f"l{j}"),
-                    (
-                        F.coalesce(F.col(f"{b}.__nl"), F.col(f"{a}.{lp}"))
-                        < F.col(f"{a}.{lp}")
-                    ).alias(f"c{j}"),
-                )
-            )
-            if j < steps:
-                # lazy lineage cut (see pagerank._blocked_loop): each
-                # step references its predecessor twice (frontier scatter
-                # + apply join), so an un-cut chain grows 2^k plan nodes
-                cur = cur.localCheckpoint(eager=False)
-        cur = materialize(cur)
-        row = cur.agg(
-            *[
-                F.sum(F.col(f"c{j}").cast("long")).alias(f"n{j}")
-                for j in range(1, steps + 1)
-            ]
-        ).first()
-        block_ms = max(int((time.time() - t0) * 1000), 0)
-        taken = steps
-        for j in range(1, steps + 1):
-            done += 1
-            changed_last = int(row[f"n{j}"] or 0)
-            history.append(
-                {
-                    "algo": "cc",
-                    "iteration": done - 1,
-                    "changed": changed_last,
-                    "wall_ms": block_ms // steps,
-                }
-            )
-            if changed_last == 0:
-                taken = j
-                stop = True
-                break
-        cur = cur.select(
-            "vertex", F.col(f"l{taken}").alias("l0"), F.col(f"c{taken}").alias("c0")
-        )
-    return (
-        cur.select(
-            "vertex", F.col("l0").alias("label"), F.col("c0").alias("changed")
-        ),
-        done,
-        changed_last,
-    )
+    if stats is not None:
+        stats["bucketized"] = fp.tier == "persist-chain"
+    return out
 
 
 def renumber_by_size(components: DataFrame) -> DataFrame:

@@ -15,22 +15,62 @@ partition before the shuffle.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webgraph_algo_rs_spark.checkpoint import CheckpointManager
+from webgraph_algo_rs_spark.plans.fixpoint import Fixpoint
+from webgraph_algo_rs_spark.plans.local_csr import lpa_kernel
 from webgraph_algo_rs_spark.plans.superstep import (
     SRC,
     DST,
     W,
-    PersistChain,
-    pin_edges,
     graph_vertices,
-    materialize,
     symmetrize,
 )
+
+
+class _LabelPropagation(Fixpoint):
+    algo = "lpa"
+    schema = "vertex bigint, label bigint"
+    output = "label"
+    carried = ("label",)
+    metric = "changed"
+
+    def kernel(self, max_iter):
+        return lpa_kernel(max_iter)
+
+    def prepare(self, edges, n_edges):
+        # probe the raw scan (see components.py)
+        self.edges = self.pin(symmetrize(edges), probe_df=edges)
+        return graph_vertices(self.edges).select(
+            "vertex", F.col("vertex").alias("label")
+        )
+
+    def step(self, cur, j, prev):
+        # no delta frontier: the vote needs every neighbor's current label
+        label = F.col(f"label{j - 1}")
+        tally = (
+            cur.select(F.col("vertex").alias("__v"), label.alias("__l"))
+            .join(self.edges, F.col("__v") == F.col(SRC))
+            .groupBy(DST, "__l")
+            .agg(F.sum(W).alias("__wsum"))
+        )
+        best = tally.groupBy(DST).agg(
+            F.max_by(
+                "__l", F.struct(F.col("__wsum"), (-F.col("__l")).alias("neg"))
+            ).alias("__nl")
+        )
+        nl = F.coalesce(F.col("__nl"), label)
+        return cur.join(best, F.col("vertex") == F.col(DST), "left").select(
+            *cur.columns, nl.alias(f"label{j}"), (nl != label).alias(f"changed{j}")
+        )
+
+    def aggregates(self, j):
+        return {"changed": F.sum(F.col(f"changed{j}").cast("long"))}
+
+    def converged(self, metrics):
+        return metrics["changed"] == 0
 
 
 def label_propagation(
@@ -45,253 +85,14 @@ def label_propagation(
 ) -> DataFrame:
     """Returns ``(vertex:bigint, label:bigint)``.
 
-    ``bucketize_edges``: big-graph path — pin the symmetrized arcs on
-    ``src`` once (block-manager cache / bucketed table / auto — see
-    ``pin_edges``; ``edge_store`` selects) so each superstep shuffles
-    only labels.
-    ``block_size``: majority-vote supersteps chained per Spark action
-    (the PageRank blocked-loop pattern, `pagerank.py:233-336`); default
-    4 when unset; clamped to 1 with ``checkpoint`` or
-    ``bucketize_edges``. The stop rule — first superstep with zero
-    label changes — is evaluated per chained step, bit-identical to the
-    per-step loop.
-    ``local_mode``: ``True`` forces the partition-local CSR kernel
-    (``plans/local_csr.py``), ``False`` forbids it, ``None`` auto-picks
-    it under ``wga.localKernelMaxEdges`` edges when no explicit
-    strategy (checkpoint / bucketize / block_size) was requested.
-    Integer-weight tallies are bit-exact vs the distributed loop.
+    Tiers, ``bucketize_edges``, ``block_size`` (majority-vote supersteps
+    chained per Spark action), ``local_mode``, ``checkpoint`` and
+    ``stats`` are the fixpoint driver's (``plans/fixpoint.py``); the
+    stop rule is the first superstep with zero label changes, or
+    ``max_iter``. ``edge_store`` selects the pinned edge store on the
+    persist-chain tier (``pin_edges``). Integer-weight tallies are
+    bit-exact vs the local kernel.
     """
-    spark = edges.sparkSession
-    if local_mode and (checkpoint is not None or bucketize_edges):
-        # an explicit force must not be silently overridden (the other
-        # strategies demand a different physical plan): the local kernel
-        # runs the whole loop inside one task, so per-iteration durable
-        # checkpoints / pinned edge buckets cannot apply to it
-        raise ValueError(
-            "local_mode=True cannot be combined with "
-            + ("checkpoint" if checkpoint is not None else "bucketize_edges")
-        )
-    if (
-        not bucketize_edges
-        and local_mode is not False
-        and (local_mode or block_size is None)
-    ):
-        from webgraph_algo_rs_spark.plans.local_csr import (
-            bucketize_min_edges,
-            local_kernel_threshold,
-            lpa_kernel,
-            probe_edge_count,
-            run_local_kernel,
-        )
-
-        thr = local_kernel_threshold(spark)
-        big_thr = bucketize_min_edges(spark)
-        n_edges = probe_edge_count(edges, max(thr, big_thr))
-        if n_edges == 0 and checkpoint is None:
-            if stats is not None:
-                stats.update(iterations=0, changed=0)
-            return spark.createDataFrame([], "vertex bigint, label bigint")
-        if not local_mode and n_edges > big_thr:
-            # size dispatch, upper end (see components.py): route huge
-            # graphs to the persist-chain path, not the blocked loop —
-            # checkpointed runs included
-            bucketize_edges = True
-        elif checkpoint is None and (local_mode or n_edges <= thr):
-            out = run_local_kernel(
-                edges,
-                "vertex bigint, label bigint, iterations int, changed bigint",
-                lpa_kernel(max_iter),
-            )
-            if stats is not None:
-                head = out.select("iterations", "changed").first()
-                stats.update(
-                    iterations=int(head["iterations"]),
-                    changed=int(head["changed"]),
-                    tier="local-csr",
-                )
-            return out.select("vertex", "label")
-
-    if stats is not None:
-        stats["tier"] = "persist-chain" if bucketize_edges else "blocked"
-    if block_size is None:
-        block_size = 4
-    drop_bucketed = None
-    if bucketize_edges:
-        # probe the raw scan — see components.py: the symmetrize plan's
-        # groupBy defeats limit() short-circuiting, and the ≤2× raw
-        # undercount only shifts a near-threshold pick onto the
-        # spill-safe cached store.
-        sym, drop_bucketed = pin_edges(
-            symmetrize(edges), SRC, table_name="wga_lpa_edges", store=edge_store,
-            probe_df=edges,
-        )
-    else:
-        sym = materialize(symmetrize(edges))
-
-    history: list[dict] = []
-    start_iter = 0
-    state = None
-    if checkpoint is not None:
-        resumed = checkpoint.latest(spark)
-        if resumed is not None:
-            df, snap = resumed
-            state = materialize(df.select("vertex", "label"))
-            start_iter = snap.iteration + 1
-            history = list(snap.history)
-    if state is None:
-        state = materialize(
-            graph_vertices(sym).select("vertex", F.col("vertex").alias("label"))
-        )
-
-    if checkpoint is None and not bucketize_edges and block_size > 1:
-        state, iters, changed = _blocked_lpa_loop(
-            state, sym, max_iter, block_size, history, start_iter
-        )
-        if stats is not None:
-            stats.update(iterations=iters - start_iter, changed=changed)
-        return state
-
-    chain = None
-    if bucketize_edges:
-        # big-graph memory discipline (see components.py / PersistChain)
-        chain = PersistChain(
-            "vertex", int(spark.conf.get("spark.sql.shuffle.partitions"))
-        )
-        state = chain.seed(state)
-
-    changed = -1
-    it = start_iter
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        tally = (
-            state.join(sym, state.vertex == sym[SRC])
-            .groupBy(DST, "label")
-            .agg(F.sum(W).alias("wsum"))
-        )
-        best = tally.groupBy(DST).agg(
-            F.max_by("label", F.struct(F.col("wsum"), (-F.col("label")).alias("neg"))).alias(
-                "new_label"
-            )
-        )
-        stepped_plan = state.join(best, state.vertex == best[DST], "left").select(
-            "vertex",
-            F.coalesce("new_label", "label").alias("label"),
-            (F.coalesce("new_label", "label") != F.col("label")).alias("changed"),
-        )
-        stepped = (
-            chain.stage(stepped_plan, it - start_iter)
-            if chain is not None
-            else materialize(stepped_plan)
-        )
-        changed = stepped.filter("changed").count()
-        if chain is not None:
-            chain.advance(stepped)
-        state = stepped.select("vertex", "label")
-        metrics = {
-            "algo": "lpa",
-            "iteration": it,
-            "changed": changed,
-            "wall_ms": int((time.time() - t0) * 1000),
-        }
-        history.append(metrics)
-        if checkpoint is not None and checkpoint.should_save(it):
-            checkpoint.save(state, it, metrics, history)
-        if changed == 0:
-            break
-
-    if stats is not None:
-        stats.update(iterations=it + 1 - start_iter, changed=changed)
-    if chain is not None:
-        state = chain.finish(state)
-    if drop_bucketed is not None:
-        # the result no longer reads the scratch table (materialized
-        # per-step or pinned by chain.finish); drop it to avoid leaking
-        # an edge copy per run
-        drop_bucketed()
-    return state
-
-
-def _blocked_lpa_loop(
-    state: DataFrame,
-    sym: DataFrame,
-    max_iter: int,
-    k: int,
-    history: list[dict],
-    start_iter: int,
-) -> tuple[DataFrame, int, int]:
-    """Chain ``k`` majority-vote supersteps per Spark action with
-    carried ``l0..lk`` / ``c0..ck`` columns (no delta frontier: the vote
-    needs every neighbor's current label, changed or not). Returns
-    ``(state(vertex,label), iterations, last_changed)``."""
-    done = start_iter
-    stop = False
-    changed_last = -1
-    cur = state.select("vertex", F.col("label").alias("l0"))
-    while not stop and done < max_iter:
-        steps = min(k, max_iter - done)
-        t0 = time.time()
-        for j in range(1, steps + 1):
-            lp = f"l{j - 1}"
-            tally = (
-                cur.select(F.col("vertex").alias("__v"), F.col(lp).alias("__l"))
-                .join(sym, F.col("__v") == F.col(SRC))
-                .groupBy(DST, "__l")
-                .agg(F.sum(W).alias("__wsum"))
-            )
-            best = tally.groupBy(DST).agg(
-                F.max_by(
-                    "__l", F.struct(F.col("__wsum"), (-F.col("__l")).alias("neg"))
-                ).alias("__nl")
-            )
-            a, b = f"__s{j}", f"__m{j}"
-            cur = (
-                cur.alias(a)
-                .join(
-                    best.alias(b),
-                    F.col(f"{a}.vertex") == F.col(f"{b}.{DST}"),
-                    "left",
-                )
-                .select(
-                    *[F.col(f"{a}.{c}") for c in cur.columns],
-                    F.coalesce(F.col(f"{b}.__nl"), F.col(f"{a}.{lp}")).alias(
-                        f"l{j}"
-                    ),
-                    (
-                        F.coalesce(F.col(f"{b}.__nl"), F.col(f"{a}.{lp}"))
-                        != F.col(f"{a}.{lp}")
-                    ).alias(f"c{j}"),
-                )
-            )
-            if j < steps:
-                # lazy lineage cut (see pagerank._blocked_loop)
-                cur = cur.localCheckpoint(eager=False)
-        cur = materialize(cur)
-        row = cur.agg(
-            *[
-                F.sum(F.col(f"c{j}").cast("long")).alias(f"n{j}")
-                for j in range(1, steps + 1)
-            ]
-        ).first()
-        block_ms = max(int((time.time() - t0) * 1000), 0)
-        taken = steps
-        for j in range(1, steps + 1):
-            done += 1
-            changed_last = int(row[f"n{j}"] or 0)
-            history.append(
-                {
-                    "algo": "lpa",
-                    "iteration": done - 1,
-                    "changed": changed_last,
-                    "wall_ms": block_ms // steps,
-                }
-            )
-            if changed_last == 0:
-                taken = j
-                stop = True
-                break
-        cur = cur.select("vertex", F.col(f"l{taken}").alias("l0"))
-    return (
-        cur.select("vertex", F.col("l0").alias("label")),
-        done,
-        changed_last,
+    return _LabelPropagation(edge_store).run(
+        edges, max_iter, checkpoint, stats, bucketize_edges, block_size, local_mode
     )

@@ -11,40 +11,110 @@ Convergence mirrors the reference's per-iteration modified-counter stop
 rule (``/root/reference/src/algo/hyperball/hyperball_impl.rs:552-570``):
 we track the L1 residual ``Σ|r_{t+1} − r_t|`` and stop at ``tol``.
 
-Per-iteration cost: exactly two Spark jobs — one to materialize the new
-state (lineage cut, SURVEY §7 hard part №1), one aggregate that yields
-residual *and* next dangling mass in a single pass.
-
-Superstep blocking (``block_size``): the non-checkpointed small/medium
-path chains ``k`` supersteps into ONE lazy plan — per-step dangling
-mass enters as a cross-joined 1-row aggregate (Catalyst's exchange
-reuse dedupes the shared prefix), the frame carries ``r0..rk`` rank
-columns, and a single action computes every step's L1 residual and
-dangling mass at once. The stop rule then *selects* the first rank
-column whose residual met ``tol`` — bit-identical values and stop
-iteration to the per-step loop, with k× fewer driver barriers. Global
-sync points are a real cost on a 1000-executor cluster too (stragglers
-amplify every barrier), but the big-graph bucketized path keeps
-``k=1``: there shuffle time dominates and per-iteration persist-chain
-eviction control matters more.
+Tiers, superstep blocking, checkpoints and stats are the shared
+fixpoint driver's (``plans/fixpoint.py``). A step's dangling mass is the
+previous step's stop aggregate when an earlier action computed it, else
+a 1-row aggregate cross-joined into the step plan (Catalyst's exchange
+reuse shares its prefix with the message aggregation).
 """
 
 from __future__ import annotations
-
-import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webgraph_algo_rs_spark.checkpoint import CheckpointManager
+from webgraph_algo_rs_spark.plans.fixpoint import Fixpoint
+from webgraph_algo_rs_spark.plans.local_csr import pagerank_kernel
 from webgraph_algo_rs_spark.plans.superstep import (
     SRC,
     DST,
     W,
     graph_vertices,
     materialize,
-    pin_edges,
 )
+
+
+def _dangling_mass(rank):
+    return F.coalesce(F.sum(F.when(F.col("dangling"), rank)), F.lit(0.0))
+
+
+class _PageRank(Fixpoint):
+    algo = "pagerank"
+    schema = "vertex bigint, rank double"
+    output = "rank"
+    keys = ("vertex", "dangling")
+    carried = ("rank",)
+    metric = "residual"
+    metric_type = "double"
+    unset = float("inf")
+
+    def __init__(self, damping: float, tol: float, edge_store: str):
+        super().__init__(edge_store)
+        self.damping, self.tol = damping, tol
+        self.n = None
+
+    def kernel(self, max_iter):
+        return pagerank_kernel(self.damping, self.tol, max_iter)
+
+    def prepare(self, edges, n_edges):
+        vertices = materialize(graph_vertices(edges))
+        n = self.n = vertices.count()
+        out_w = edges.groupBy(SRC).agg(F.sum(W).alias("out_w"))
+        norm_plan = edges.join(out_w, SRC).select(
+            SRC, DST, (F.col(W) / F.col("out_w")).alias("nw")
+        )
+        base = vertices.join(out_w, vertices.vertex == out_w[SRC], "left").select(
+            "vertex",
+            F.col("out_w").isNull().alias("dangling"),
+            F.lit(1.0 / n).alias("rank"),
+        )
+        if self.tier == "persist-chain":
+            self.edges = self.pin(norm_plan, probe_df=edges)
+            return base
+        # small-graph partition sizing: checkpointed frames pin their
+        # map-side partition count, and 32 tasks per stage on a 40k-edge
+        # graph is pure scheduling latency (measured ~2× on the sf0.1
+        # bench). Size the edge frame by edge count (a dense 10k-vertex /
+        # 10M-edge graph must not collapse its scan to one task) — the
+        # probe is exact on this tier and the normalize join preserves rows.
+        p = min(self.n_buckets, max(n, n_edges) // 20_000 + 1)
+        self.edges = self.pin(norm_plan.coalesce(p), probe_df=edges)
+        return base.coalesce(min(self.n_buckets, n // 20_000 + 1))
+
+    def step(self, cur, j, prev):
+        r = F.col(f"rank{j - 1}")
+        msgs = (
+            cur.select(F.col("vertex").alias("__v"), r.alias("__r"))
+            .join(self.edges, F.col("__v") == F.col(SRC))
+            .groupBy(DST)
+            .agg(F.sum(F.col("__r") * F.col("nw")).alias("__c"))
+        )
+        stepped = cur.join(msgs, F.col("vertex") == F.col(DST), "left")
+        if prev is None:
+            stepped = stepped.crossJoin(cur.agg(_dangling_mass(r).alias("__dm")))
+            dm = F.col("__dm")
+        else:
+            dm = F.lit(prev["dangling_mass"])
+        n = float(self.n)
+        return stepped.select(
+            *cur.columns,
+            (
+                F.lit((1.0 - self.damping) / n)
+                + F.lit(self.damping)
+                * (F.coalesce(F.col("__c"), F.lit(0.0)) + dm / F.lit(n))
+            ).alias(f"rank{j}"),
+        )
+
+    def aggregates(self, j):
+        r = F.col(f"rank{j}")
+        return {
+            "residual": F.sum(F.abs(r - F.col(f"rank{j - 1}"))),
+            "dangling_mass": _dangling_mass(r),
+        }
+
+    def converged(self, metrics):
+        return metrics["residual"] < self.tol
 
 
 def pagerank(
@@ -55,7 +125,6 @@ def pagerank(
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
     bucketize_edges: bool = False,
-    lineage_cut_every: int = 6,
     block_size: int | None = None,
     local_mode: bool | None = None,
     edge_store: str = "auto",
@@ -64,360 +133,23 @@ def pagerank(
 
     ``checkpoint``: durable per-iteration snapshots + resume (a fresh
     call with the same manager continues where a killed run committed).
-    ``stats``: optional dict populated with iterations/residual/edge
-    count for benchmarking.
-    ``block_size``: supersteps chained per Spark action (see module
-    docstring; default 4, clamped to 1 when ``checkpoint`` is given —
-    per-iteration durability is the point of checkpointing — or when
-    ``bucketize_edges`` keeps the persist-chain big-graph path).
-    ``local_mode``: ``True`` forces the partition-local CSR kernel
-    (``plans/local_csr.py`` — the north star's "vectorized Arrow/pandas
-    UDFs over partition-local CSR blocks"); ``False`` forbids it;
-    ``None`` auto-picks it for graphs under ``wga.localKernelMaxEdges``
-    edges when no other physical strategy was requested (no checkpoint,
-    no bucketizing, no explicit ``block_size``).
+    ``stats``: optional dict populated with tier/iterations/residual/
+    wall_sec and ``n_vertices``.
+    ``bucketize_edges``: take the persist-chain big-graph tier.
+    ``block_size``: supersteps chained per Spark action (default 4;
+    1 with ``checkpoint`` or on the persist-chain tier).
+    ``local_mode``: ``True`` forces the partition-local CSR kernel,
+    ``False`` forbids it, ``None`` auto-picks it under
+    ``wga.localKernelMaxEdges`` edges.
     ``edge_store``: physical store of the pinned edge table on the
-    big-graph path — ``"cached"`` / ``"table"`` / ``"auto"`` (see
+    big-graph tier — ``"cached"`` / ``"table"`` / ``"auto"`` (see
     :func:`~webgraph_algo_rs_spark.plans.superstep.pin_edges`).
     """
-    spark = edges.sparkSession
+    fp = _PageRank(damping, tol, edge_store)
     edges = edges.select(SRC, DST, W)
-
-    if local_mode and (checkpoint is not None or bucketize_edges):
-        # an explicit force must not be silently overridden (the other
-        # strategies demand a different physical plan): the local kernel
-        # runs the whole loop inside one task, so per-iteration durable
-        # checkpoints / pinned edge buckets cannot apply to it
-        raise ValueError(
-            "local_mode=True cannot be combined with "
-            + ("checkpoint" if checkpoint is not None else "bucketize_edges")
-        )
-    probed_edges = None
-    local_eligible = (
-        not bucketize_edges
-        and local_mode is not False
-        and (local_mode or block_size is None)
+    out = fp.run(
+        edges, max_iter, checkpoint, stats, bucketize_edges, block_size, local_mode
     )
-    if local_eligible:
-        from webgraph_algo_rs_spark.plans.local_csr import (
-            bucketize_min_edges,
-            local_kernel_threshold,
-            pagerank_kernel,
-            probe_edge_count,
-            run_local_kernel,
-        )
-
-        thr = local_kernel_threshold(spark)
-        big_thr = bucketize_min_edges(spark)
-        n_edges = probed_edges = probe_edge_count(edges, max(thr, big_thr))
-        if n_edges == 0 and checkpoint is None:
-            if stats is not None:
-                stats.update(
-                    iterations=0, residual=0.0, n_vertices=0, wall_sec=0.0,
-                    tier="empty",
-                )
-            return spark.createDataFrame([], "vertex bigint, rank double")
-        if not local_mode and n_edges > big_thr:
-            # size dispatch, upper end (see components.py): huge graphs
-            # go to the persist-chain big-graph path automatically —
-            # checkpointed runs included (durability must not demote a
-            # huge graph onto the per-step materialize loop)
-            bucketize_edges = True
-        elif checkpoint is None and (local_mode or n_edges <= thr):
-            t0 = time.time()
-            out = run_local_kernel(
-                edges,
-                "vertex bigint, rank double, iterations int, residual double",
-                pagerank_kernel(damping, tol, max_iter),
-            )
-            if stats is not None:
-                head = out.select("iterations", "residual").first()
-                stats.update(
-                    iterations=int(head["iterations"]),
-                    residual=float(head["residual"]),
-                    n_vertices=out.count(),
-                    wall_sec=time.time() - t0,
-                    tier="local-csr",
-                )
-            return out.select("vertex", "rank")
-
     if stats is not None:
-        # physical tier actually taken (bench.py reports this per query
-        # so a regression can't hide behind a dispatch switch)
-        stats["tier"] = "persist-chain" if bucketize_edges else "blocked"
-    vertices = materialize(graph_vertices(edges))
-    n = vertices.count()
-    if n == 0:
-        if stats is not None:
-            stats.update(iterations=0, residual=0.0, n_vertices=0, wall_sec=0.0)
-        return vertices.select("vertex", F.lit(0.0).alias("rank"))
-    out_w = edges.groupBy(SRC).agg(F.sum(W).alias("out_w"))
-    norm_plan = edges.join(out_w, SRC).select(
-        SRC, DST, (F.col(W) / F.col("out_w")).alias("nw")
-    )
-    n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    drop_bucketed = None
-    if bucketize_edges:
-        # big-graph path: pin the edge table on src once (block-manager
-        # cache when it fits, bucketed+sorted table at 10^12-edge scale
-        # — see pin_edges) so every superstep shuffles only the rank
-        # vector, never the edge table
-        norm_edges, drop_bucketed = pin_edges(
-            norm_plan,
-            SRC,
-            n_buckets=n_buckets,
-            table_name="wga_pr_edges",
-            store=edge_store,
-            probe_df=edges,
-        )
-    else:
-        # small-graph partition sizing: the reducer side is coalesced by
-        # AQE, but checkpointed state/edge frames pin their map-side
-        # partition count — 32 tasks per stage on a 40k-edge graph is
-        # pure scheduling latency (measured ~2× on the sf0.1 bench).
-        # Size the EDGE frame by edge count, not vertex count (ADVICE
-        # r3: a dense 10k-vertex / 10M-edge graph must not collapse its
-        # per-superstep scan to one task), up to the session's
-        # configured shuffle parallelism.
-        # the normalize join is row-preserving, so |edges| == |norm_plan|
-        # and the cheaper pre-join scan sizes it. Reuse the dispatch
-        # probe when it ran; otherwise probe capped at the saturation
-        # point (p maxes out at n_buckets once the count reaches
-        # n_buckets·20k rows) — never a full pass over the edge table
-        # just to size a coalesce.
-        if probed_edges is None:
-            from webgraph_algo_rs_spark.plans.local_csr import probe_edge_count
-
-            probed_edges = probe_edge_count(edges, n_buckets * 20_000)
-        p = min(n_buckets, max(n, probed_edges) // 20_000 + 1)
-        norm_edges = materialize(norm_plan.coalesce(p))
-    base_plan = vertices.join(out_w, vertices.vertex == out_w[SRC], "left").select(
-        "vertex", F.col("out_w").isNull().alias("dangling")
-    )
-    if not bucketize_edges:
-        base_plan = base_plan.coalesce(min(n_buckets, n // 20_000 + 1))
-    base_state = materialize(base_plan)
-
-    history: list[dict] = []
-    start_iter = 0
-    state = None
-    if checkpoint is not None:
-        resumed = checkpoint.latest(spark)
-        if resumed is not None:
-            df, snap = resumed
-            state = materialize(df.select("vertex", "dangling", "rank"))
-            start_iter = snap.iteration + 1
-            history = list(snap.history)
-
-    if state is None:
-        state = materialize(
-            base_state.select("vertex", "dangling", F.lit(1.0 / n).alias("rank"))
-        )
-    prev_handle = None
-    if bucketize_edges:
-        # persist-chain mode: keep the state hash-partitioned on vertex
-        # (same bucket count as the edge table) and persist instead of
-        # localCheckpoint — a checkpoint forgets the partitioning and
-        # forces two state re-shuffles per superstep (measured 2× on the
-        # apply join). Lineage is cut every ``lineage_cut_every`` iters.
-        state = state.repartition(n_buckets, "vertex").persist()
-        prev_handle = state
-
-    k = 1 if (checkpoint is not None or bucketize_edges) else (block_size or 4)
-    if k > 1:
-        state, n_iters, residual, wall = _blocked_loop(
-            state, norm_edges, n, damping, tol, max_iter, k, history
-        )
-        if stats is not None:
-            stats.update(
-                iterations=n_iters, residual=residual, n_vertices=n, wall_sec=wall
-            )
-        return state.select("vertex", "rank")
-
-    dangling_mass = state.filter("dangling").agg(F.sum("rank")).first()[0] or 0.0
-    residual = float("inf")
-    it = start_iter
-    t_start = time.time()
-    for it in range(start_iter, max_iter):
-        t0 = time.time()
-        msgs = (
-            state.join(norm_edges, state.vertex == norm_edges[SRC])
-            .groupBy(DST)
-            .agg(F.sum(F.col("rank") * F.col("nw")).alias("contrib"))
-        )
-        new_rank = (
-            F.lit((1.0 - damping) / n)
-            + F.lit(damping)
-            * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dangling_mass / n))
-        )
-        stepped_plan = state.join(msgs, state.vertex == msgs[DST], "left").select(
-            "vertex",
-            "dangling",
-            new_rank.alias("rank"),
-            F.col("rank").alias("prev_rank"),
-        )
-        if bucketize_edges:
-            stepped = stepped_plan.persist()  # materialized by the agg below
-            # Each superstep references the state twice (scatter + apply),
-            # so the un-truncated plan DOUBLES per iteration — cut the
-            # lineage every few supersteps to keep Catalyst analysis
-            # bounded (2^4 small subtrees max) while persisted, known
-            # partitioning carries across the iterations in between.
-            if (it - start_iter) % lineage_cut_every == lineage_cut_every - 1:
-                chk = materialize(stepped).repartition(n_buckets, "vertex").persist()
-                stepped.unpersist()
-                stepped = chk
-        else:
-            stepped = materialize(stepped_plan)
-        agg = stepped.agg(
-            F.sum(F.abs(F.col("rank") - F.col("prev_rank"))).alias("residual"),
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias("dm"),
-        ).first()
-        residual, dangling_mass = float(agg["residual"]), float(agg["dm"] or 0.0)
-        if bucketize_edges:
-            # The agg above materialized `stepped`; release the previous
-            # iteration's *persisted handle*. (`state` is a `.select()`
-            # projection of it, and CacheManager only uncaches plans that
-            # sameResult the cached plan — unpersisting the projection is
-            # a silent no-op that leaks one full state copy per superstep.)
-            prev_handle.unpersist()
-            prev_handle = stepped
-        state = stepped.select("vertex", "dangling", "rank")
-        metrics = {
-            "algo": "pagerank",
-            "iteration": it,
-            "residual": residual,
-            "dangling_mass": dangling_mass,
-            "wall_ms": int((time.time() - t0) * 1000),
-        }
-        history.append(metrics)
-        if checkpoint is not None and checkpoint.should_save(it):
-            checkpoint.save(state, it, metrics, history)
-        if residual < tol:
-            break
-
-    if stats is not None:
-        stats.update(
-            iterations=it + 1 - start_iter,
-            residual=residual,
-            n_vertices=n,
-            wall_sec=time.time() - t_start,
-        )
-    result = state.select("vertex", "rank")
-    if bucketize_edges:
-        # Pin the result independently of the session-scoped bucketed
-        # table and the persist chain: its lineage otherwise scans
-        # `wga_pr_edges_*`, which a later run may overwrite, silently
-        # corrupting recomputation if cached blocks are evicted.
-        result = materialize(result)
-        prev_handle.unpersist()
-        # the bucketed table is per-run scratch: drop it or every run
-        # leaks a full normalized-edge copy in the warehouse dir
-        drop_bucketed()
-    return result
-
-
-def _blocked_loop(
-    state: DataFrame,
-    norm_edges: DataFrame,
-    n: int,
-    damping: float,
-    tol: float,
-    max_iter: int,
-    k: int,
-    history: list[dict],
-) -> tuple[DataFrame, int, float, float]:
-    """Run supersteps in blocks of ``k`` per Spark action (module
-    docstring). Returns ``(state, iterations, residual, wall_sec)``
-    where ``state`` is ``(vertex, dangling, rank)`` at the first
-    iteration whose L1 residual met ``tol`` — the exact per-step stop
-    rule, evaluated from the block's carried ``r0..rk`` columns."""
-    t_start = time.time()
-    residual = float("inf")
-    done = 0
-    stop = False
-    cur = state.select("vertex", "dangling", F.col("rank").alias("r0"))
-    while not stop and done < max_iter:
-        steps = min(k, max_iter - done)
-        t0 = time.time()
-        for j in range(1, steps + 1):
-            rp = f"r{j - 1}"
-            # the step's dangling mass: a 1-row aggregate cross-joined
-            # into the plan — exchange reuse shares its prefix with the
-            # message aggregation below, so nothing is computed twice
-            dm = cur.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("dangling"), F.col(rp))), F.lit(0.0)
-                ).alias("__dm")
-            )
-            msgs = (
-                cur.select(F.col("vertex").alias("__v"), F.col(rp).alias("__r"))
-                .join(norm_edges, F.col("__v") == F.col(SRC))
-                .groupBy(DST)
-                .agg(F.sum(F.col("__r") * F.col("nw")).alias("__c"))
-            )
-            a, b = f"__s{j}", f"__m{j}"
-            cur = (
-                cur.alias(a)
-                .join(
-                    msgs.alias(b),
-                    F.col(f"{a}.vertex") == F.col(f"{b}.{DST}"),
-                    "left",
-                )
-                .crossJoin(dm)
-                .select(
-                    *[F.col(f"{a}.{c}") for c in cur.columns],
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col(f"{b}.__c"), F.lit(0.0))
-                            + F.col("__dm") / F.lit(float(n))
-                        )
-                    ).alias(f"r{j}"),
-                )
-            )
-            if j < steps:
-                # lazy lineage cut: the logical plan becomes an RDD scan
-                # NOW (each step references its predecessor three times —
-                # message gather, dangling-mass aggregate, apply join —
-                # so an un-cut chain grows 3^k logical nodes and
-                # recomputes the un-exchanged plan segments), while the
-                # RDD itself is only computed inside the block's single
-                # action and cached on first touch
-                cur = cur.localCheckpoint(eager=False)
-        cur = materialize(cur)
-        aggs = []
-        for j in range(1, steps + 1):
-            aggs.append(
-                F.sum(F.abs(F.col(f"r{j}") - F.col(f"r{j - 1}"))).alias(f"res{j}")
-            )
-            aggs.append(
-                F.coalesce(
-                    F.sum(F.when(F.col("dangling"), F.col(f"r{j}"))), F.lit(0.0)
-                ).alias(f"dm{j}")
-            )
-        row = cur.agg(*aggs).first()
-        block_ms = max(int((time.time() - t0) * 1000), 0)
-        taken = steps
-        for j in range(1, steps + 1):
-            done += 1
-            residual = float(row[f"res{j}"])
-            history.append(
-                {
-                    "algo": "pagerank",
-                    "iteration": done - 1,
-                    "residual": residual,
-                    "dangling_mass": float(row[f"dm{j}"]),
-                    "wall_ms": block_ms // steps,
-                }
-            )
-            if residual < tol:
-                taken = j
-                stop = True
-                break
-        cur = cur.select(
-            "vertex", "dangling", F.col(f"r{taken}").alias("r0")
-        )
-    final = cur.select("vertex", "dangling", F.col("r0").alias("rank"))
-    return final, done, residual, time.time() - t_start
+        stats["n_vertices"] = fp.n if fp.n is not None else out.count()
+    return out

@@ -357,10 +357,9 @@ def salted_agg(
 
 class PersistChain:
     """Explicit persisted-handle rotation for big-graph fixpoint loops —
-    the PageRank discipline (`operators/pagerank.py:227-252`) packaged
-    for reuse. ``materialize`` (eager ``localCheckpoint``) per superstep
-    leaks one full state copy per iteration until the ContextCleaner's
-    weak-reference GC catches up; on a 157M-edge run the cleaner itself
+    the persist-chain tier of ``plans/fixpoint.py``. ``materialize``
+    (eager ``localCheckpoint``) per superstep leaks one full state copy
+    per iteration until the ContextCleaner's weak-reference GC catches up; on a 157M-edge run the cleaner itself
     OOMed before it could (measured, round 4). This helper persists each
     superstep's state, lets the caller's action materialize it, then
     *explicitly* releases the previous handle, so exactly two state
