@@ -1222,6 +1222,39 @@ def test_decode_jpeg_progressive():
     assert fr == 1 and feat.shape == (16,) and np.all(np.isfinite(feat))
 
 
+def _drop_last_restart_segment(payload, scan):
+    """``payload`` without the last RSTn marker of SOS scan ``scan`` and
+    the entropy bytes that follow it: that scan is one restart segment
+    short of what its restart interval implies."""
+    sos = [i for i in range(len(payload) - 1) if payload[i : i + 2] == b"\xff\xda"]
+    start = sos[scan]
+    j = start + 2 + int.from_bytes(payload[start + 2 : start + 4], "big")
+    last_rst = None
+    while not (payload[j] == 0xFF and payload[j + 1] not in range(0xD0, 0xD8)
+               and payload[j + 1] != 0x00):
+        if payload[j] == 0xFF and payload[j + 1] in range(0xD0, 0xD8):
+            last_rst = j
+        j += 1
+    assert last_rst is not None, "scan has no restart marker"
+    return payload[:last_rst] + payload[j:]
+
+
+def test_decode_jpeg_missing_restart_marker_raises_value_error():
+    """A stream missing an RSTn segment raises the decoder's documented
+    ValueError, not IndexError: baseline, progressive DC (first scan)
+    and progressive AC (last scan)."""
+    from webgraph_algo_rs_spark.functions.multimodal import decode_builtin
+
+    img = np.random.default_rng(5).integers(0, 256, size=(24, 17), dtype=np.uint8)
+    baseline = _make_jpeg(img, restart_interval=3)
+    progressive = _make_progressive_jpeg(img, restart_interval=3)
+    for payload, scan in [(baseline, 0), (progressive, 0), (progressive, -1)]:
+        decode_builtin(payload, "image", 16)  # the intact stream decodes
+        cut = _drop_last_restart_segment(payload, scan)
+        with pytest.raises(ValueError, match="restart marker missing"):
+            decode_builtin(cut, "image", 16)
+
+
 def test_decode_gif_lossless():
     """GIF LZW decode is bit-exact: a gray-palette GIF round-trips to
     the source array, sequential and interlaced, and the grid-mean

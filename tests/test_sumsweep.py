@@ -393,3 +393,23 @@ def test_scalar_levels_random_cross_check(spark, n, p, seed):
     ufull = radius_diameter(edges).first()
     assert diameter_undirected(edges).first().diameter == ufull.diameter
     assert radius_undirected(edges).first().radius == ufull.radius
+
+
+def test_directed_all_level_forwards_loop_arguments(spark):
+    """radius_diameter_directed at output level All runs the same loop
+    as directed_eccentricities with the caller's arguments: with the
+    endgame disabled both take the same number of rounds, and the
+    result row is the one the default budget gives."""
+    from webgraph_algo_rs_spark.operators import radius_diameter_directed
+    from webgraph_algo_rs_spark.operators.sumsweep import directed_eccentricities
+
+    df = edge_df(spark, er_graph(20, 0.1, 5))
+    s1: dict = {}
+    s2: dict = {}
+    row = radius_diameter_directed(
+        df, output_level="all", endgame_budget=0, stats=s1
+    ).first()
+    directed_eccentricities(df, endgame_budget=0, stats=s2).count()
+    assert s2["rounds"] > 1
+    assert s1["rounds"] == s2["rounds"]
+    assert row == radius_diameter_directed(df, output_level="all").first()

@@ -556,6 +556,15 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v - (1 << t) + 1 if t and v < (1 << (t - 1)) else v
 
 
+def _segment_reader(segments: list[bytes], idx: int) -> _BitReader:
+    """Reader over the entropy segment after the ``idx``-th RSTn marker;
+    a stream with fewer restart segments than its restart interval
+    implies raises ``ValueError``."""
+    if idx >= len(segments):
+        raise ValueError("JPEG restart marker missing")
+    return _BitReader(segments[idx])
+
+
 def _entropy_segments(p: bytes, j: int) -> tuple[list[bytes], int]:
     """Unstuff entropy-coded bytes starting at offset ``j``, splitting
     at RSTn markers; returns ``(segments, offset_of_next_marker)``.
@@ -671,7 +680,7 @@ def _decode_jpeg(p: bytes) -> np.ndarray:
     for m in range(mcx * mcy):
         if restart_interval and m and m % restart_interval == 0:
             seg_idx += 1
-            reader = _BitReader(segments[seg_idx])
+            reader = _segment_reader(segments, seg_idx)
             preds = [0] * len(scan_comps)
         my, mx = divmod(m, mcx)
         for ci, comp in enumerate(scan_comps):
@@ -885,7 +894,7 @@ def _prog_dc_scan(
     for m in range(units):
         if restart_interval and m and m % restart_interval == 0:
             seg_idx += 1
-            reader = _BitReader(segments[seg_idx])
+            reader = _segment_reader(segments, seg_idx)
             preds = [0] * len(scomps)
         if interleaved:
             my, mx = divmod(m, mcx)
@@ -926,7 +935,7 @@ def _prog_ac_scan(segments, ac_t, ycoef, ss, se, ah, al, geom, restart_interval)
     for m in range(by * bx):
         if restart_interval and m and m % restart_interval == 0:
             seg_idx += 1
-            reader = _BitReader(segments[seg_idx])
+            reader = _segment_reader(segments, seg_idx)
             eobrun = 0
         blk = ycoef[m // bx, m % bx]
         if ah == 0:  # first pass for this band

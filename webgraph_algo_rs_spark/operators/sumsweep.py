@@ -29,12 +29,21 @@ side) — a two-rule simplification of the reference's five-way
 utility-driven chooser (`computer.rs:340-414`): same fixpoint, fewer
 moving parts; termination is identical (no open vertex).
 
+Both loops (:func:`_undirected_ess_state`, :func:`_directed_ess_state`)
+end each non-endgame round with one upper-bound relaxation,
+:func:`_relax`, over one arc table (undirected) or two (directed:
+arcs and transpose). Every scalar entry point — radius and/or
+diameter, directed or undirected, at every output level including
+``All`` — runs its loop and hands the final bound state to one lazy
+result builder, :func:`_ess_row`.
+
 Semantics on disconnected graphs: eccentricity within each connected
 component; ``diameter = max``, ``radius = min`` over all vertices.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
 from pyspark.sql import DataFrame
@@ -49,6 +58,30 @@ from webgraph_algo_rs_spark.plans.superstep import (
 )
 
 _INF = (1 << 62)
+
+
+def _progress(line: str) -> None:
+    """Round line of a long ESS run, printed when ``WGA_PROGRESS=1``
+    (set by ``tools/ess_cnr2000_probe.py``)."""
+    if os.environ.get("WGA_PROGRESS") == "1":
+        print(line, flush=True)
+
+
+def _radial_set(
+    edges: DataFrame, radial: DataFrame | None, comps: DataFrame
+) -> DataFrame:
+    """The directed radius's ``vertex`` set: the caller's override —
+    ``(vertex, is_radial)`` or bare ``vertex``, the reference's
+    ``Some(radial_vertices)`` argument — or, by default, the vertices
+    reaching the largest SCC of the ``(vertex, component)`` frame
+    ``comps`` (`computer.rs:488-534`)."""
+    from webgraph_algo_rs_spark.operators.scc import radial_vertices
+
+    if radial is None:
+        radial = radial_vertices(edges, components=comps)
+    if "is_radial" in radial.columns:
+        radial = radial.filter("is_radial")
+    return radial.select("vertex")
 
 
 def _tagged_bfs(sym: DataFrame, seeds: DataFrame) -> DataFrame:
@@ -102,28 +135,54 @@ def eccentricities(
     return state.select("vertex", "component", F.col("low").alias("ecc"))
 
 
-def _relax_undirected(sym: DataFrame, state: DataFrame, iters: int = 2) -> DataFrame:
-    """Undirected twin of :func:`_relax_upper_bounds`:
-    ``ecc(w) ≤ 1 + max over neighbours' high`` (first hop of a shortest
-    path; ``= 0`` for isolated vertices). Less critical than the
-    directed form — undirected triangle bounds already generalize
-    component-wide — but each pass still spreads fresh exact
-    eccentricities one hop at edge-join cost."""
+def _relax(
+    state: DataFrame, sides: list[tuple[DataFrame, str]], iters: int
+) -> DataFrame:
+    """Per-vertex upper-bound relaxation (round-5 step, closing the
+    in-2004-scale plateau of `bench_logs/rmat_in2004_rd_anchor_r5b.log`:
+    100k open periphery vertices, sweeps closing only their own pivots).
+
+    ``sides`` lists ``(arc table, bound column)`` pairs — ``[(sym,
+    "high")]`` undirected, ``[(arcs, "high_f"), (transpose, "high_b")]``
+    directed. For ANY vertex ``w`` and any target ``x``, the first hop
+    of a shortest ``w → x`` path lands on some successor ``v`` with
+    ``d(w,x) = 1 + d(v,x) ≤ 1 + ecc_f(v)``, so
+
+        ``ecc_f(w) ≤ 1 + max_{v ∈ succ(w)} high_f(v)``
+
+    (``= 0`` when ``w`` has no successors — it reaches nothing), and
+    dually ``ecc_b(w) ≤ 1 + max over predecessors' high_b``. Iterating
+    propagates certified eccentricities from the closed core outward
+    one hop per pass — the per-VERTEX generalization of the per-SCC
+    AllCC DAG DP (`computer.rs:424-479`), sound on cycles (the min()
+    keeps bounds monotone non-increasing and never below the truth).
+    This is what mass-certifies small/singleton-SCC periphery vertices
+    whose bounds neither the same-SCC triangle rules (wrong SCC) nor
+    the condensation DP (bound telescopes too loosely down a deep DAG)
+    can close. Undirected triangle bounds already generalize
+    component-wide, but each pass still spreads fresh exact
+    eccentricities one hop. Each pass is one join of the edge table
+    with the n-row state per side and one materialize — a superstep,
+    not a flood."""
+    bounds = [col for _, col in sides]
     for _ in range(iters):
-        nb = (
-            sym.join(state.select(F.col("vertex").alias(DST), "high"), DST)
-            .groupBy(SRC)
-            .agg(F.max("high").alias("m"))
-            .select(F.col(SRC).alias("vertex"), "m")
-        )
+        relaxed = state
+        for arcs, col in sides:
+            nb = (
+                arcs.join(state.select(F.col("vertex").alias(DST), col), DST)
+                .groupBy(SRC)
+                .agg(F.max(col).alias(f"m_{col}"))
+                .select(F.col(SRC).alias("vertex"), f"m_{col}")
+            )
+            relaxed = relaxed.join(nb, "vertex", "left")
         state = materialize(
-            state.join(nb, "vertex", "left").select(
-                "vertex",
-                "component",
-                "low",
-                F.least(
-                    "high", F.coalesce(F.col("m") + 1, F.lit(0))
-                ).alias("high"),
+            relaxed.select(
+                *(
+                    F.least(c, F.coalesce(F.col(f"m_{c}") + 1, F.lit(0))).alias(c)
+                    if c in bounds
+                    else c
+                    for c in state.columns
+                )
             )
         )
     return state
@@ -136,7 +195,6 @@ def _undirected_ess_state(
     pivots_per_rule: int = 4,
     stats: dict | None = None,
     endgame_budget: int = 50_000_000,
-    progress: bool = False,
 ) -> DataFrame:
     """Undirected SumSweep bound-tightening loop; returns the final
     ``(vertex, component, low, high)`` state.
@@ -196,12 +254,7 @@ def _undirected_ess_state(
             else:
                 open_v = open_v.filter(cond_d | cond_r)
         n_open = open_v.count()
-        if progress:
-            print(
-                f"uess round {rounds} open {n_open} "
-                f"elapsed {time.time() - t0:.1f}s",
-                flush=True,
-            )
+        _progress(f"uess round {rounds} open {n_open} elapsed {time.time() - t0:.1f}s")
         if n_open == 0:
             break
         if n_open * n_vertices <= endgame_budget:
@@ -246,7 +299,7 @@ def _undirected_ess_state(
                 F.least("high", F.coalesce("hi", F.lit(_INF))).alias("high"),
             )
         )
-        state = _relax_undirected(sym, state, iters=2)
+        state = _relax(state, [(sym, "high")], iters=2)
     if stats is not None:
         stats.update(
             rounds=rounds,
@@ -359,7 +412,6 @@ def _directed_ess_state(
     """
     from webgraph_algo_rs_spark.operators.bfs import bfs_distances
     from webgraph_algo_rs_spark.operators.scc import (
-        radial_vertices,
         scc_condensation,
         strongly_connected_components,
     )
@@ -373,22 +425,10 @@ def _directed_ess_state(
     cond = materialize(scc_condensation(edges, comps))
     rad = None
     if output_level in ("radius_diameter", "radius"):
-        if radial is None:
-            # reuse the SCC frame materialized above — radial_vertices
-            # recomputes the full SCC otherwise (~100 s of the cnr-2000
-            # profile, /tmp/ess_profile_r5.log round 5)
-            rad = (
-                radial_vertices(edges, components=comps)
-                .filter("is_radial")
-                .select("vertex")
-            )
-        else:
-            rad = (
-                radial.filter("is_radial")
-                if "is_radial" in radial.columns
-                else radial
-            ).select("vertex")
-        rad = materialize(rad)
+        # reuse the SCC frame materialized above — radial_vertices
+        # recomputes the full SCC otherwise (~100 s of the cnr-2000
+        # profile, round 5)
+        rad = materialize(_radial_set(edges, radial, comps))
     state = materialize(
         comps.select(
             "vertex",
@@ -404,11 +444,7 @@ def _directed_ess_state(
             stats.update(rounds=0, output_level=output_level)
         return state, rad
 
-    import os as _os
-    import time as _time
-
-    progress = _os.environ.get("WGA_PROGRESS") == "1"
-    t_loop = _time.time()
+    t_loop = time.time()
     n_vertices = state.count()
     rounds = 0
     # utility-driven step choice (the reference's points array,
@@ -454,13 +490,11 @@ def _directed_ess_state(
             step = "sweep"  # the reference's sum_sweep_heuristic opener
         else:
             step = "allcc" if points["allcc"] >= points["sweep"] else "sweep"
-        if progress:
-            detail = " ".join(f"{k} {v}" for k, v in info.items())
-            print(
-                f"ess round {rounds} open {n_open} next {step} {detail} "
-                f"points {points} elapsed {_time.time() - t_loop:.1f}s",
-                flush=True,
-            )
+        detail = " ".join(f"{k} {v}" for k, v in info.items())
+        _progress(
+            f"ess round {rounds} open {n_open} next {step} {detail} "
+            f"points {points} elapsed {time.time() - t_loop:.1f}s"
+        )
         # Endgame: once the open set is small enough that flooding every
         # open vertex keeps the tagged-BFS state bounded (open·n rows),
         # sweep them all — each sweep pivot closes exactly, so this
@@ -514,70 +548,12 @@ def _directed_ess_state(
             # right at the plateau it exists to break): 4 supersteps
             # spread the round's fresh exact eccentricities up to 4 hops
             # into the open periphery at edge-table-join cost.
-            state = _relax_upper_bounds(arcs, transpose, state, iters=4)
+            state = _relax(
+                state, [(arcs, "high_f"), (transpose, "high_b")], iters=4
+            )
     if stats is not None:
         stats.update(rounds=rounds, output_level=output_level)
     return state, rad
-
-
-def _relax_upper_bounds(arcs, transpose, state, iters: int = 8) -> DataFrame:
-    """Per-vertex upper-bound relaxation (round-5 step, closing the
-    in-2004-scale plateau of `bench_logs/rmat_in2004_rd_anchor_r5b.log`:
-    100k open periphery vertices, sweeps closing only their own pivots).
-
-    For ANY vertex ``w`` and any target ``x``, the first hop of a
-    shortest ``w → x`` path lands on some successor ``v`` with
-    ``d(w,x) = 1 + d(v,x) ≤ 1 + ecc_f(v)``, so
-
-        ``ecc_f(w) ≤ 1 + max_{v ∈ succ(w)} high_f(v)``
-
-    (``= 0`` when ``w`` has no successors — it reaches nothing), and
-    dually ``ecc_b(w) ≤ 1 + max over predecessors' high_b``. Iterating
-    propagates certified eccentricities from the closed core outward
-    one hop per pass — the per-VERTEX generalization of the per-SCC
-    AllCC DAG DP (`computer.rs:424-479`), sound on cycles (the min()
-    keeps bounds monotone non-increasing and never below the truth).
-    This is what mass-certifies small/singleton-SCC periphery vertices
-    whose bounds neither the same-SCC triangle rules (wrong SCC) nor
-    the condensation DP (bound telescopes too loosely down a deep DAG)
-    can close. Each pass is one join of the edge table with the n-row
-    state per direction — a superstep, not a flood."""
-    for _ in range(iters):
-        succ_max = (
-            arcs.join(
-                state.select(F.col("vertex").alias(DST), "high_f"), DST
-            )
-            .groupBy(SRC)
-            .agg(F.max("high_f").alias("mf"))
-            .select(F.col(SRC).alias("vertex"), "mf")
-        )
-        pred_max = (
-            transpose.join(
-                state.select(F.col("vertex").alias(DST), "high_b"), DST
-            )
-            .groupBy(SRC)
-            .agg(F.max("high_b").alias("mb"))
-            .select(F.col(SRC).alias("vertex"), "mb")
-        )
-        state = materialize(
-            state.join(succ_max, "vertex", "left")
-            .join(pred_max, "vertex", "left")
-            .select(
-                "vertex",
-                "component",
-                "low_f",
-                F.least(
-                    "high_f",
-                    F.coalesce(F.col("mf") + 1, F.lit(0)),
-                ).alias("high_f"),
-                "low_b",
-                F.least(
-                    "high_b",
-                    F.coalesce(F.col("mb") + 1, F.lit(0)),
-                ).alias("high_b"),
-            )
-        )
-    return state
 
 
 def _missing_radius_diameter(
@@ -1089,6 +1065,65 @@ def _dag_dp_spark(nodes: DataFrame, dag_df: DataFrame) -> DataFrame:
     )
 
 
+def _ess_row(
+    state: DataFrame,
+    high: str | None = None,
+    lows: tuple[str, ...] = (),
+    radial: DataFrame | None = None,
+) -> DataFrame:
+    """Lazy one-row radius/diameter frame over a final ESS ``state`` —
+    the result path of every scalar entry point, at every output level.
+
+    ``high`` names the radius's upper-bound column: ``radius = min(high)``
+    (over ``radial`` when given) with witness ``min_by(vertex, (high,
+    vertex))``; once no lower bound in the set undercuts it, the argmin
+    vertex attains it. ``lows`` names the diameter's lower-bound
+    column(s): ``diameter = max(low)`` with witness ``max_by(vertex,
+    (low, -vertex))``. With ``("low_f", "low_b")`` the diameter is
+    certified from either side (``diameter = max ecc_f = max ecc_b``,
+    `computer.rs:1008-1012`) and the witness attains it in the forward
+    sense if ``low_f`` won, the backward sense otherwise (the
+    reference's diameter_vertex is likewise the attaining sweep's start
+    on either side, `computer.rs:641-644,703-706`); ties go forward. At
+    ``output_level="all"`` every bound is closed at the eccentricity, so
+    these are the min-id witnesses among all attaining vertices.
+
+    Columns: ``radius``, ``diameter``, ``radius_vertex``,
+    ``diameter_vertex`` (those requested, in that order). An empty
+    graph gives the sentinel row — ``0`` values, ``-1`` witnesses."""
+    parts = []
+    if high is not None:
+        rows = state if radial is None else state.join(radial, "vertex", "left_semi")
+        parts.append(
+            rows.agg(
+                F.coalesce(F.min(high), F.lit(0)).alias("radius"),
+                F.coalesce(
+                    F.min_by("vertex", F.struct(F.col(high), F.col("vertex"))),
+                    F.lit(-1),
+                ).alias("radius_vertex"),
+            )
+        )
+    if lows:
+        dia = [F.max(low) for low in lows]
+        wit = [
+            F.max_by("vertex", F.struct(F.col(low), (-F.col("vertex")).alias("t")))
+            for low in lows
+        ]
+        diameter, witness = dia[0], wit[0]
+        if len(lows) == 2:
+            diameter = F.greatest(*dia)
+            witness = F.when(dia[0] >= dia[1], wit[0]).otherwise(wit[1])
+        parts.append(
+            state.agg(
+                F.coalesce(diameter, F.lit(0)).alias("diameter"),
+                F.coalesce(witness, F.lit(-1)).alias("diameter_vertex"),
+            )
+        )
+    out = parts[0] if len(parts) == 1 else parts[0].crossJoin(parts[1])
+    order = ("radius", "diameter", "radius_vertex", "diameter_vertex")
+    return out.select(*(c for c in order if c in out.columns))
+
+
 def radius_diameter_directed(
     edges: DataFrame,
     radial: DataFrame | None = None,
@@ -1115,101 +1150,23 @@ def radius_diameter_directed(
     when several vertices attain it the choice follows the bound
     evidence, not a global min-id rule. ``output_level="all"`` closes
     every vertex first and returns the min-id witness among all
-    attaining vertices — deterministic, at All's full cost."""
-    if output_level == "radius_diameter":
-        state, rad = _directed_ess_state(
-            edges,
-            output_level="radius_diameter",
-            radial=radial,
-            max_rounds=max_rounds,
-            pivots_per_rule=pivots_per_rule,
-            stats=stats,
-            endgame_budget=endgame_budget,
-        )
-        # D_L = max(max low_f, max low_b) is certified as the diameter
-        # (one side's missing set emptied: no high on that side exceeds
-        # it, and diameter = max ecc_f = max ecc_b) and is attained by
-        # its argmax-low vertex — in the forward sense if low_f won, in
-        # the backward sense otherwise (the reference's diameter_vertex
-        # is likewise the attaining sweep's start on either side,
-        # computer.rs:641-644,703-706); symmetrically min high_f over
-        # radial is the radius and its argmin vertex attains it (low_f
-        # >= R_U for every radial vertex once the missing set is empty).
-        d0 = state.agg(
-            F.max("low_f").alias("dlf"),
-            F.max_by(
-                "vertex", F.struct(F.col("low_f"), (-F.col("vertex")).alias("t"))
-            ).alias("wf"),
-            F.max("low_b").alias("dlb"),
-            F.max_by(
-                "vertex", F.struct(F.col("low_b"), (-F.col("vertex")).alias("t"))
-            ).alias("wb"),
-        ).first()
-        dlf, dlb = d0["dlf"] or 0, d0["dlb"] or 0
-        d = {
-            "diameter": max(dlf, dlb),
-            "diameter_vertex": d0["wf"] if dlf >= dlb else d0["wb"],
-        }
-        r = (
-            state.join(rad, "vertex", "left_semi")
-            .agg(
-                F.min("high_f").alias("radius"),
-                F.min_by(
-                    "vertex", F.struct(F.col("high_f"), F.col("vertex"))
-                ).alias("radius_vertex"),
-            )
-            .first()
-        )
-        return edges.sparkSession.createDataFrame(
-            [
-                (
-                    int(r["radius"]) if r["radius"] is not None else 0,
-                    int(d["diameter"]) if d["diameter"] is not None else 0,
-                    int(r["radius_vertex"]) if r["radius_vertex"] is not None else -1,
-                    int(d["diameter_vertex"])
-                    if d["diameter_vertex"] is not None
-                    else -1,
-                )
-            ],
-            "radius long, diameter long, radius_vertex long, diameter_vertex long",
-        )
-
-    from webgraph_algo_rs_spark.operators.scc import radial_vertices
-
-    ecc = directed_eccentricities(edges, stats=stats)
-    if radial is None:
-        rad = radial_vertices(edges).filter("is_radial").select("vertex")
-    else:
-        rad = (
-            radial.filter("is_radial") if "is_radial" in radial.columns else radial
-        ).select("vertex")
-    r = (
-        ecc.join(rad, "vertex", "left_semi")
-        .agg(
-            F.min("ecc_f").alias("radius"),
-            F.min_by("vertex", F.struct(F.col("ecc_f"), F.col("vertex"))).alias(
-                "radius_vertex"
-            ),
-        )
-        .first()
+    attaining vertices — deterministic, at All's full cost; its radial
+    set is computed after the loop from the loop's own SCC frame, so
+    the sweeps' pivot choice is that of :func:`directed_eccentricities`.
+    """
+    level = "radius_diameter" if output_level == "radius_diameter" else "all"
+    state, rad = _directed_ess_state(
+        edges,
+        output_level=level,
+        radial=radial,
+        max_rounds=max_rounds,
+        pivots_per_rule=pivots_per_rule,
+        stats=stats,
+        endgame_budget=endgame_budget,
     )
-    d = ecc.agg(
-        F.max("ecc_f").alias("diameter"),
-        F.max_by(
-            "vertex", F.struct(F.col("ecc_f"), (-F.col("vertex")).alias("t"))
-        ).alias("diameter_vertex"),
-    ).first()
-    return edges.sparkSession.createDataFrame(
-        [
-            (
-                int(r["radius"]) if r["radius"] is not None else 0,
-                int(d["diameter"]) if d["diameter"] is not None else 0,
-                int(r["radius_vertex"]) if r["radius_vertex"] is not None else -1,
-                int(d["diameter_vertex"]) if d["diameter_vertex"] is not None else -1,
-            )
-        ],
-        "radius long, diameter long, radius_vertex long, diameter_vertex long",
-    )
+    if rad is None:
+        rad = _radial_set(edges, radial, state.select("vertex", "component"))
+    return _ess_row(state, "high_f", ("low_f", "low_b"), rad)
 
 
 def radius_diameter(
@@ -1229,63 +1186,9 @@ def radius_diameter(
     radius = min high once no low undercuts it); witnesses provably
     attain the values but tie choice follows the bound evidence.
     """
-    if output_level == "radius_diameter":
-        state = _undirected_ess_state(
-            edges, output_level="radius_diameter", stats=stats, **kwargs
-        )
-        row = state.agg(
-            F.min("high").alias("radius"),
-            F.min_by(
-                "vertex", F.struct(F.col("high"), F.col("vertex"))
-            ).alias("radius_vertex"),
-            F.max("low").alias("diameter"),
-            F.max_by(
-                "vertex", F.struct(F.col("low"), (-F.col("vertex")).alias("t"))
-            ).alias("diameter_vertex"),
-        ).first()
-        return edges.sparkSession.createDataFrame(
-            [
-                (
-                    int(row["radius"]) if row["radius"] is not None else 0,
-                    int(row["diameter"]) if row["diameter"] is not None else 0,
-                    int(row["radius_vertex"])
-                    if row["radius_vertex"] is not None
-                    else -1,
-                    int(row["diameter_vertex"])
-                    if row["diameter_vertex"] is not None
-                    else -1,
-                )
-            ],
-            "radius long, diameter long, radius_vertex long, diameter_vertex long",
-        )
-    ecc = eccentricities(edges, stats=stats, **kwargs)
-    row = ecc.agg(
-        F.min("ecc").alias("radius"),
-        F.max("ecc").alias("diameter"),
-        F.min_by("vertex", F.struct(F.col("ecc"), F.col("vertex"))).alias(
-            "radius_vertex"
-        ),
-        F.max_by(
-            "vertex", F.struct(F.col("ecc"), (-F.col("vertex")).alias("t"))
-        ).alias("diameter_vertex"),
-    ).first()
-    # empty graph → the same (0, 0, -1, -1) sentinel row the directed
-    # form and the radius_diameter level return, not a row of NULLs
-    return edges.sparkSession.createDataFrame(
-        [
-            (
-                int(row["radius"]) if row["radius"] is not None else 0,
-                int(row["diameter"]) if row["diameter"] is not None else 0,
-                int(row["radius_vertex"])
-                if row["radius_vertex"] is not None
-                else -1,
-                int(row["diameter_vertex"])
-                if row["diameter_vertex"] is not None
-                else -1,
-            )
-        ],
-        "radius long, diameter long, radius_vertex long, diameter_vertex long",
-    )
+    level = "radius_diameter" if output_level == "radius_diameter" else "all"
+    state = _undirected_ess_state(edges, output_level=level, stats=stats, **kwargs)
+    return _ess_row(state, "high", ("low",))
 
 
 def forward_eccentricities(
@@ -1318,22 +1221,7 @@ def diameter_directed(
     state, _ = _directed_ess_state(
         edges, output_level="diameter", stats=stats, **kwargs
     )
-    row = state.agg(
-        F.max("low_f").alias("dlf"),
-        F.max_by(
-            "vertex", F.struct(F.col("low_f"), (-F.col("vertex")).alias("t"))
-        ).alias("wf"),
-        F.max("low_b").alias("dlb"),
-        F.max_by(
-            "vertex", F.struct(F.col("low_b"), (-F.col("vertex")).alias("t"))
-        ).alias("wb"),
-    ).first()
-    dlf, dlb = row["dlf"] or 0, row["dlb"] or 0
-    witness = row["wf"] if dlf >= dlb else row["wb"]
-    return edges.sparkSession.createDataFrame(
-        [(max(dlf, dlb), int(witness) if witness is not None else -1)],
-        "diameter long, diameter_vertex long",
-    )
+    return _ess_row(state, lows=("low_f", "low_b"))
 
 
 def radius_directed(
@@ -1351,27 +1239,7 @@ def radius_directed(
     state, rad = _directed_ess_state(
         edges, output_level="radius", radial=radial, stats=stats, **kwargs
     )
-    row = (
-        state.join(rad, "vertex", "left_semi")
-        .agg(
-            F.min("high_f").alias("radius"),
-            F.min_by(
-                "vertex", F.struct(F.col("high_f"), F.col("vertex"))
-            ).alias("radius_vertex"),
-        )
-        .first()
-    )
-    return edges.sparkSession.createDataFrame(
-        [
-            (
-                int(row["radius"]) if row["radius"] is not None else 0,
-                int(row["radius_vertex"])
-                if row["radius_vertex"] is not None
-                else -1,
-            )
-        ],
-        "radius long, radius_vertex long",
-    )
+    return _ess_row(state, "high_f", radial=rad)
 
 
 def diameter_undirected(
@@ -1384,23 +1252,7 @@ def diameter_undirected(
     state = _undirected_ess_state(
         edges, output_level="diameter", stats=stats, **kwargs
     )
-    row = state.agg(
-        F.max("low").alias("diameter"),
-        F.max_by(
-            "vertex", F.struct(F.col("low"), (-F.col("vertex")).alias("t"))
-        ).alias("diameter_vertex"),
-    ).first()
-    return edges.sparkSession.createDataFrame(
-        [
-            (
-                int(row["diameter"]) if row["diameter"] is not None else 0,
-                int(row["diameter_vertex"])
-                if row["diameter_vertex"] is not None
-                else -1,
-            )
-        ],
-        "diameter long, diameter_vertex long",
-    )
+    return _ess_row(state, lows=("low",))
 
 
 def radius_undirected(
@@ -1420,20 +1272,4 @@ def radius_undirected(
     state = _undirected_ess_state(
         edges, output_level="radius", stats=stats, **kwargs
     )
-    row = state.agg(
-        F.min("high").alias("radius"),
-        F.min_by(
-            "vertex", F.struct(F.col("high"), F.col("vertex"))
-        ).alias("radius_vertex"),
-    ).first()
-    return edges.sparkSession.createDataFrame(
-        [
-            (
-                int(row["radius"]) if row["radius"] is not None else 0,
-                int(row["radius_vertex"])
-                if row["radius_vertex"] is not None
-                else -1,
-            )
-        ],
-        "radius long, radius_vertex long",
-    )
+    return _ess_row(state, "high")
