@@ -15,9 +15,28 @@ Edge rules (FIXTURES.md §2):
   ``tool IS NOT NULL``;
 * weights = multiplicity after ``groupBy(src,dst)`` aggregation.
 
-Vertex dictionary: ``(kind, key) → dense bigint id``. Dense assignment
-uses the scalable two-pass *zipWithIndex* pattern (per-partition counts
-→ offsets), never a single-partition global window.
+One scan (:func:`_aggregate`). A single window pass over the transcripts
+emits, per turn, the reply pair ``(prev_author_key, author_key)``, the
+tool pair ``(author_key, tool_key)`` and a ``(key, NULL)`` marker for the
+author key (every turn, tool or not) and for the tool key. One
+``groupBy(src_key, dst_key, kind)`` then yields the weighted edge
+multiset (rows with a ``dst_key``) and every vertex key exactly once (the
+marker rows, ``kind`` = ``participant`` or ``tool``), with no separate
+distinct. The aggregate is pinned once; the id assignment and both id
+joins read the pin, never the transcripts.
+
+Vertex dictionary: ``(kind, key) → dense bigint id``, ids ``0..n-1``
+ordered by key. A key that is both a participant and a tool (conversation
+``tool`` with role ``tool_000``) has two dictionary rows and one id; the
+edge joins go through the key-unique id frame, so each edge appears once.
+
+:func:`dense_ids` takes one range shuffle: ``repartitionByRange`` on the
+key clusters equal keys, so ``dropDuplicates`` and ``sortWithinPartitions``
+run in the same stage, where ``monotonically_increasing_id() - (pid << 33)``
+is each key's rank inside its range. After the pin, one small collect of
+per-partition counts gives each range's offset, added back as a literal
+array indexed by partition id. No global single-task window, no offsets
+join.
 
 The per-turn **text equality invariant** (input_hint): extraction never
 mutates the transcript rows; ``tests/test_extraction.py`` checks texts
@@ -30,38 +49,45 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def _ranked(df: DataFrame, key_col: str) -> DataFrame:
+    """Distinct keys in range order, with ``_pid`` (range ordinal) and
+    ``_rn`` (rank inside the range) — one range shuffle, one stage after it.
+
+    ``monotonically_increasing_id`` is ``(pid << 33) + row number`` of the
+    partition it runs in; evaluated right after the sort, the row number
+    is the key's rank.
+    """
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    pid = F.spark_partition_id().cast("long")
+    return (
+        df.select(key_col)
+        .repartitionByRange(n_part, key_col)
+        .dropDuplicates([key_col])
+        .sortWithinPartitions(key_col)
+        .select(
+            key_col,
+            pid.alias("_pid"),
+            (F.monotonically_increasing_id() - F.shiftleft(pid, 33)).alias("_rn"),
+        )
+    )
+
+
 def dense_ids(df: DataFrame, key_col: str, id_col: str = "id") -> DataFrame:
     """Assign dense contiguous ids ``0..n-1`` to distinct keys, ordered by key.
 
-    Scalable zipWithIndex: range-repartition + sort by key, count rows per
-    partition, broadcast cumulative offsets, add partition-local row
-    number. No global single-task window.
+    Duplicate input keys are allowed. The ranked keys are pinned (partition
+    ids are plan-scoped, so both reads must see one evaluation); the
+    per-partition counts (≤ one small row per partition — driver-safe at
+    any scale) become the offsets.
     """
-    spark = df.sparkSession
-    keys = df.select(key_col).distinct()
-    n_part = max(keys.sparkSession.sparkContext.defaultParallelism, 1)
-    keys = keys.repartitionByRange(n_part, key_col).sortWithinPartitions(key_col)
-    keys = keys.withColumn("_pid", F.spark_partition_id())
-    keys = keys.localCheckpoint(eager=True)  # pin partitioning for both passes
-    counts = dict(
-        keys.groupBy("_pid").count().collect()
-    )  # ≤ one small row per partition — driver-safe at any scale
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offsets_df = F.broadcast(
-        spark.createDataFrame(
-            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
-        )
-    )
-    w = Window.partitionBy("_pid").orderBy(key_col)
-    return (
-        keys.withColumn("_rn", F.row_number().over(w) - F.lit(1))
-        .join(offsets_df, "_pid")
-        .select(key_col, (F.col("_offset") + F.col("_rn")).alias(id_col))
-    )
+    ranked = _ranked(df, key_col).localCheckpoint(eager=True)
+    counts = dict(ranked.groupBy("_pid").count().collect())
+    offsets, acc = [], 0
+    for p in range(max(counts, default=-1) + 1):
+        offsets.append(acc)
+        acc += counts.get(p, 0)
+    offset = F.lit(offsets).cast("array<bigint>")[F.col("_pid")]
+    return ranked.select(key_col, (offset + F.col("_rn")).alias(id_col))
 
 
 def author_vertex_key(conv_id=None, role=None):
@@ -71,59 +97,72 @@ def author_vertex_key(conv_id=None, role=None):
     return F.concat_ws("/", conv_id, role)
 
 
+def _aggregate(transcripts: DataFrame) -> DataFrame:
+    """Pinned ``(src_key, dst_key, kind, weight)``: edges where ``dst_key``
+    is set (``kind`` NULL), vertex markers where it is NULL."""
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    author = F.col("author_key")
+    tool = F.col("tool_key")
+    none = F.lit(None).cast("string")
+    turns = transcripts.select(
+        "conv_id",
+        "turn_idx",
+        author_vertex_key().alias("author_key"),
+        F.concat(F.lit("tool/"), "tool").alias("tool_key"),  # NULL when tool is
+    ).withColumn("prev_key", F.lag("author_key").over(w))
+
+    def row(src, dst, kind):
+        return F.struct(src.alias("src_key"), dst.alias("dst_key"), kind.alias("kind"))
+
+    rows = F.array(
+        row(F.col("prev_key"), author, none),
+        row(author, tool, none),
+        row(author, none, F.lit("participant")),
+        row(tool, none, F.lit("tool")),
+    )
+    return (
+        turns.select(F.inline(rows))
+        # drops the first turn's reply pair and, on tool-less turns, the
+        # tool pair and the tool marker
+        .filter(F.col("src_key").isNotNull() & F.coalesce("dst_key", "kind").isNotNull())
+        .groupBy("src_key", "dst_key", "kind")
+        .agg(F.count(F.lit(1)).cast("double").alias("weight"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _markers(agg: DataFrame) -> DataFrame:
+    return agg.filter(F.col("dst_key").isNull()).select("kind", F.col("src_key").alias("key"))
+
+
 def build_vertices(transcripts: DataFrame) -> DataFrame:
     """Vertex dictionary ``(kind, key, vertex_id)`` with dense long ids."""
-    participants = transcripts.select(
-        F.lit("participant").alias("kind"), author_vertex_key().alias("key")
-    )
-    tools = (
-        transcripts.filter(F.col("tool").isNotNull())
-        .select(F.lit("tool").alias("kind"), F.concat_ws("/", F.lit("tool"), "tool").alias("key"))
-    )
-    all_keys = participants.unionByName(tools).distinct()
-    ids = dense_ids(all_keys.select("key"), "key", "vertex_id")
-    return all_keys.join(ids, "key").select("kind", "key", "vertex_id")
-
-
-def raw_edges(transcripts: DataFrame) -> DataFrame:
-    """Un-aggregated natural-key edges ``(src_key, dst_key)``."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    authored = transcripts.select(
-        "conv_id", "turn_idx", "tool", author_vertex_key().alias("author_key")
-    )
-    reply = (
-        authored.withColumn("prev_key", F.lag("author_key").over(w))
-        .filter(F.col("prev_key").isNotNull())
-        .select(F.col("prev_key").alias("src_key"), F.col("author_key").alias("dst_key"))
-    )
-    tool_edges = authored.filter(F.col("tool").isNotNull()).select(
-        F.col("author_key").alias("src_key"),
-        F.concat_ws("/", F.lit("tool"), "tool").alias("dst_key"),
-    )
-    return reply.unionByName(tool_edges)
+    markers = _markers(_aggregate(transcripts))
+    ids = dense_ids(markers, "key", "vertex_id")
+    return markers.join(ids, "key").select("kind", "key", "vertex_id")
 
 
 def extract_edges(transcripts: DataFrame, vertices: DataFrame | None = None) -> DataFrame:
     """Full pipeline: transcripts → ``(src_vertex, dst_vertex, weight)``.
 
     Aggregates key-pairs *before* mapping to ids (map-side combine on the
-    smaller distinct key space), then joins the vertex dictionary twice.
-    The dictionary join broadcasts when small; at 10^12-turn scale it is
-    a shuffle hash join on the dictionary's dense key — both sides
-    pre-aggregated, no skew beyond what AQE's skew-join splits.
+    smaller distinct key space), then joins the key-unique id frame twice:
+    the dense ids of the aggregate's own markers or, when ``vertices`` is
+    given, that dictionary deduplicated by key. The dictionary join
+    broadcasts when small; at 10^12-turn scale it is a shuffle hash join
+    on the dictionary's dense key — both sides pre-aggregated, no skew
+    beyond what AQE's skew-join splits.
     """
+    agg = _aggregate(transcripts)
     if vertices is None:
-        vertices = build_vertices(transcripts)
-    agg = raw_edges(transcripts).groupBy("src_key", "dst_key").agg(
-        F.count(F.lit(1)).cast("double").alias("weight")
-    )
-    v = vertices.select("key", "vertex_id")
+        v = dense_ids(_markers(agg), "key", "vertex_id")
+    else:
+        v = vertices.select("key", "vertex_id").dropDuplicates(["key"])
+    src = v.select(F.col("key").alias("src_key"), F.col("vertex_id").alias("src_vertex"))
+    dst = v.select(F.col("key").alias("dst_key"), F.col("vertex_id").alias("dst_vertex"))
     return (
-        agg.join(v.withColumnRenamed("vertex_id", "src_vertex"), agg.src_key == v.key)
-        .drop("key")
-        .join(
-            v.withColumnRenamed("vertex_id", "dst_vertex").withColumnRenamed("key", "k2"),
-            F.col("dst_key") == F.col("k2"),
-        )
+        agg.filter(F.col("dst_key").isNotNull())
+        .join(src, "src_key")
+        .join(dst, "dst_key")
         .select("src_vertex", "dst_vertex", "weight")
     )

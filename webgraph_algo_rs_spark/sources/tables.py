@@ -45,7 +45,7 @@ def events_user_edges(
     ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     n_ranges = n_ranges or int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Bucket = range-partition id on the full ordering key (the
-    # dense_ids pattern, `extraction.py:33-64`): repartitionByRange is a
+    # dense_ids pattern, `extraction._ranked`): repartitionByRange is a
     # parallel sampled range shuffle, and spark_partition_id gives each
     # contiguous range its ordinal. The frame is pinned with
     # localCheckpoint so the window below and the boundary-stitch
