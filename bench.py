@@ -170,19 +170,6 @@ def main() -> None:
                 "tiers": tiers,
                 "sf": sf,
                 **extra,
-                "notes": (
-                    "r3 carried-query regression attributed to sandbox load "
-                    "(idle-box re-run: BASELINE.md attribution table, "
-                    "bench_logs/bench_r4_idle.log); "
-                    "r4 speedup is the size-dispatched local-CSR kernels "
-                    "(plans/local_csr.py — PageRank/CC/LPA/BFS/HyperBall/"
-                    "triangles) + window-folded LSH guards "
-                    "(functions/dedup.py) — distributed plans unchanged, "
-                    "dispatch thresholds keep cluster-scale graphs on the "
-                    "bucketed/persist-chain paths; 8->32 scaling on one box "
-                    "is memory-bandwidth-bound (see BASELINE.md), the N->4N "
-                    "criterion is evidenced at 2->8"
-                ),
             }
         )
     )

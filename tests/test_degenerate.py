@@ -8,25 +8,37 @@ and one 50-vertex cycle.
   the empty graph, eccentricity 0 everywhere on self-loops, the cycle's
   eccentricities (25 undirected, 49 forward and backward), and witnesses
   that attain their value — vertex 0, the min id, at output level All.
+* The other operators with a local kernel (both triangle counts, BFS,
+  DFS, HyperBall) with ``local_mode`` True, False and None: schema, row
+  count, the same rows on every tier and the recorded tier; and every
+  operator leaving the local-CSR tier at the same
+  ``wga.localKernelMaxEdges`` (HyperBall at m times it).
 """
 
 import pytest
 
-from tests.conftest import edge_df
+import webgraph_algo_rs_spark.operators.bfs as bfs_module
+from tests.conftest import DIAMOND, edge_df
 from webgraph_algo_rs_spark.operators import (
+    bfs_distances,
     connected_components,
     diameter_directed,
+    dfs_forest,
     diameter_undirected,
     directed_eccentricities,
     eccentricities,
     forward_eccentricities,
+    hyperball,
     label_propagation,
     pagerank,
     radius_diameter,
     radius_diameter_directed,
     radius_directed,
     radius_undirected,
+    triangle_count_global,
+    triangle_count_per_vertex,
 )
+from webgraph_algo_rs_spark.plans.local_csr import run_local_kernel
 
 GRAPHS = {
     "empty": [],
@@ -148,3 +160,140 @@ def test_ess_degenerate_inputs(spark, graph):
         assert set(witnesses) <= vertices, name
         if all_level:
             assert witnesses == [0] * len(witnesses), name
+
+
+HB = (
+    "vertex:bigint,reachable:double,sum_distances:double,closeness:double,"
+    "harmonic:double,lin:double,nieminen:double"
+)
+
+
+def _rows(*counts):
+    return dict(zip(GRAPHS, counts))
+
+
+DFS = "vertex:bigint,root:bigint,parent:bigint,depth:bigint,pre:bigint,post:bigint"
+# name -> (call, schema, row count per graph, tier per local_mode when
+# the op records stats else None). BFS and HyperBall stop after 3
+# levels / supersteps: on the cycle their distributed loops would
+# otherwise run 50 barriers per call.
+LOCAL_OPS = {
+    "triangle_count_global": (
+        triangle_count_global, "n_triangles:bigint", _rows(1, 1, 1),
+        {True: "local-csr", False: "distributed-join", None: "local-csr"},
+    ),
+    "triangle_count_per_vertex": (
+        triangle_count_per_vertex, "vertex:bigint,n_triangles:bigint", _rows(0, 3, 50),
+        {True: "local-csr", False: "distributed-join", None: "local-csr"},
+    ),
+    "bfs_distances": (
+        lambda e, **kw: bfs_distances(e, [0, 1], max_depth=3, predecessors=True, **kw),
+        "source:bigint,vertex:bigint,distance:bigint,pred:bigint", _rows(2, 2, 8), None,
+    ),
+    "dfs_forest": (dfs_forest, DFS, _rows(0, 3, 50), None),
+    "hyperball": (
+        lambda e, **kw: hyperball(e, log2m=6, max_iter=3, **kw), HB, _rows(0, 3, 50),
+        {True: "local-csr", False: "supersteps", None: "local-csr"},
+    ),
+}
+
+
+@pytest.mark.parametrize("graph", list(GRAPHS))
+@pytest.mark.parametrize("op", list(LOCAL_OPS))
+def test_local_kernel_ops_degenerate_inputs_agree_across_tiers(spark, op, graph):
+    fn, schema, n_rows, tiers = LOCAL_OPS[op]
+    arcs = GRAPHS[graph]
+    edges = edge_df(spark, arcs)
+    results, all_stats = {}, {}
+    for mode in (True, False, None):
+        stats: dict = {}
+        kwargs = {"local_mode": mode} | ({} if tiers is None else {"stats": stats})
+        if op == "dfs_forest" and mode is False:
+            with pytest.raises(ValueError):
+                fn(edges, **kwargs)
+            continue
+        df = fn(edges, **kwargs)
+        assert df.schema.simpleString() == f"struct<{schema}>", mode
+        rows = sorted(tuple(r) for r in df.collect())
+        assert len(rows) == n_rows[graph], mode
+        results[mode], all_stats[mode] = rows, stats
+        if tiers is not None:
+            assert stats["tier"] == ("empty" if not arcs else tiers[mode]), mode
+    want = results[True]
+    assert all(got == want for got in results.values())
+
+    if op == "hyperball":
+        for stats in all_stats.values():
+            assert stats["iterations"] == all_stats[True]["iterations"]
+            assert stats["neighbourhood_function"] == pytest.approx(
+                all_stats[True]["neighbourhood_function"], rel=1e-12
+            )
+            if not arcs:
+                assert stats["iterations"] == stats["local_supersteps"] == 0
+                assert stats["neighbourhood_function"] == [0.0]
+    if op.startswith("triangle"):
+        assert all(r[-1] == 0 for r in want)  # no graph here has a triangle
+    if op == "bfs_distances" and graph == "cycle50":
+        dist = {(s, v): d for s, v, d, _ in want}
+        assert dist == {(s, s + d): d for s in (0, 1) for d in range(4)}
+    if op == "dfs_forest" and graph == "cycle50":
+        # one tree rooted at 0 walking the cycle: depth = pre = v
+        assert want == [
+            (v, 0, None if v == 0 else v - 1, v, v, 49 - v) for v in range(50)
+        ]
+
+
+def _bfs_tier(edges, monkeypatch):
+    calls = []
+    monkeypatch.setattr(
+        bfs_module,
+        "run_local_kernel",
+        lambda *args: calls.append(args) or run_local_kernel(*args),
+    )
+    bfs_distances(edges, [0], max_depth=1).collect()
+    return "local-csr" if calls else "supersteps"
+
+
+def _dfs_tier(edges, monkeypatch):
+    try:
+        dfs_forest(edges).collect()
+    except ValueError:
+        return "raises"
+    return "local-csr"
+
+
+def _stats_tier(fn, **kwargs):
+    def tier(edges, monkeypatch):
+        stats: dict = {}
+        fn(edges, stats=stats, **kwargs).collect()
+        return stats["tier"]
+
+    return tier
+
+
+# op -> (tier probe, tier of a graph over the cap); HyperBall's cap is
+# the edge cap // m
+SWITCH_OPS = {
+    "pagerank": (_stats_tier(pagerank, max_iter=2), "blocked"),
+    "cc": (_stats_tier(connected_components, max_iter=2), "blocked"),
+    "lpa": (_stats_tier(label_propagation, max_iter=2), "blocked"),
+    "triangles": (_stats_tier(triangle_count_per_vertex), "distributed-join"),
+    "bfs": (_bfs_tier, "supersteps"),
+    "dfs": (_dfs_tier, "raises"),
+    "hyperball": (_stats_tier(hyperball, log2m=4, max_iter=2), "supersteps"),
+}
+
+
+@pytest.mark.parametrize("op", list(SWITCH_OPS))
+def test_every_local_kernel_op_switches_at_the_same_edge_count(spark, op, monkeypatch):
+    tier_of, over_cap = SWITCH_OPS[op]
+    edges = edge_df(spark, DIAMOND)
+    n = len(DIAMOND) * (16 if op == "hyperball" else 1)
+    try:
+        got = []
+        for cap in (n - 1, n):
+            spark.conf.set("wga.localKernelMaxEdges", str(cap))
+            got.append(tier_of(edges, monkeypatch))
+    finally:
+        spark.conf.unset("wga.localKernelMaxEdges")
+    assert got == [over_cap, "local-csr"]

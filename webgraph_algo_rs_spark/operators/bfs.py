@@ -19,7 +19,19 @@ from itertools import count
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from webgraph_algo_rs_spark.plans.local_csr import (
+    LOCAL,
+    bfs_kernel,
+    local_dispatch,
+    probe_edge_count,
+    run_local_kernel,
+    tagged,
+)
 from webgraph_algo_rs_spark.plans.superstep import SRC, DST, materialize
+
+# the most sources an auto-dispatched, not per-source-filtered call
+# floods inside the one local kernel task
+LOCAL_BFS_MAX_SOURCES = 512
 
 
 def bfs_distances(
@@ -58,55 +70,51 @@ def bfs_distances(
     function.
 
     ``local_mode``: ``True`` forces the partition-local CSR kernel
-    (``plans/local_csr.bfs_local`` — every flood level-synchronous
-    inside one ``mapInPandas`` task, one Spark job per call instead of
-    one barrier per BFS level), ``False`` forbids it, ``None``
-    auto-picks it under ``wga.localKernelMaxEdges`` edges. The probe
-    counts at most threshold+1 raw edge rows (a conservative upper
-    bound on the distinct count), so dispatch never scans a huge table.
+    (``plans/local_csr.bfs_kernel`` — every flood level-synchronous
+    inside one task, one Spark job per call instead of one barrier per
+    BFS level), ``False`` forbids it, ``None`` picks it by the shared
+    size dispatch (``plans/local_csr.local_dispatch``: at most
+    ``wga.localKernelMaxEdges`` raw edge rows) and, unless the filter is
+    per-source, at most ``LOCAL_BFS_MAX_SOURCES`` sources. An empty edge
+    table takes the distributed loop, which then ends after its seeds.
     """
     spark = edges.sparkSession
     if isinstance(sources, list):
         sources = spark.createDataFrame(
             [(int(s),) for s in sources], "source bigint"
         )
-    if local_mode is not False:
-        from webgraph_algo_rs_spark.plans.local_csr import (
-            LOCAL_BFS_MAX_SOURCES_CONF,
-            LOCAL_BFS_MAX_SOURCES_DEFAULT,
-            bfs_local,
-            local_kernel_threshold,
-            probe_edge_count,
+    per_source = vertex_filter is not None and "source" in vertex_filter.columns
+    tier, _ = local_dispatch(edges, local_mode)
+    if (
+        tier == LOCAL
+        and local_mode is None
+        and not per_source
+        and probe_edge_count(sources, LOCAL_BFS_MAX_SOURCES) > LOCAL_BFS_MAX_SOURCES
+    ):
+        # unfiltered (or globally filtered) floods emit up to
+        # |sources|·|reached| rows from the ONE kernel task — cap the
+        # source count so a mass flood (the ESS endgame seeds every open
+        # vertex) keeps the partitioned distributed path. A per-source
+        # filter bounds output by the filter's row count, so the per-SCC
+        # flood pattern stays local at any SCC count.
+        tier = None
+    if tier == LOCAL:
+        # the result is pinned like the distributed path's: callers
+        # re-join the visited set (ESS uses each flood several times).
+        # Measured negative result: a repartition(shuffle.partitions) of
+        # it to parallelize downstream exchanges made cnr-2000 ESS rounds
+        # ~60% SLOWER (the serial reshuffle of a ~12M-row flood costs
+        # more than the single-partition exchange maps it replaces) —
+        # keep the output single-partition.
+        vf = None
+        if vertex_filter is not None:
+            vf = (vertex_filter, "source" if per_source else "vertex", "vertex")
+        return run_local_kernel(
+            tagged(edges, (sources, "source", "source"), vf),
+            "source bigint, vertex bigint, distance bigint"
+            + (", pred bigint" if predecessors else ""),
+            bfs_kernel(max_depth, predecessors, vertex_filter is not None, per_source),
         )
-
-        thr = local_kernel_threshold(spark)
-        eligible = local_mode or (
-            thr > 0 and probe_edge_count(edges.select(SRC, DST), thr) <= thr
-        )
-        if eligible and not local_mode:
-            # unfiltered (or globally filtered) floods emit up to
-            # |sources|·|reached| rows from the ONE kernel task — cap the
-            # source count so a mass flood (the ESS endgame seeds every
-            # open vertex) keeps the partitioned distributed path. A
-            # per-source filter bounds output by the filter's row count,
-            # so the per-SCC flood pattern stays local at any SCC count.
-            if vertex_filter is None or "source" not in vertex_filter.columns:
-                try:
-                    src_cap = int(
-                        spark.conf.get(
-                            LOCAL_BFS_MAX_SOURCES_CONF,
-                            str(LOCAL_BFS_MAX_SOURCES_DEFAULT),
-                        )
-                    )
-                except (TypeError, ValueError):
-                    src_cap = LOCAL_BFS_MAX_SOURCES_DEFAULT
-                eligible = (
-                    probe_edge_count(sources.select("source"), src_cap) <= src_cap
-                )
-        if eligible:
-            return bfs_local(
-                edges.select(SRC, DST), sources, max_depth, predecessors, vertex_filter
-            )
     e = edges.select(SRC, DST).distinct()
     seeds = sources.select("source", F.col("source").alias("vertex"))
     fcols = None

@@ -11,10 +11,12 @@ missing is the *visit itself* — pre/post timestamps and the DFS forest,
 which users of the reference consume directly. That is genuinely
 per-partition imperative logic, exactly what the size-dispatched
 local-CSR strategy (`plans/local_csr.py`) exists for: the whole visit
-runs inside ONE ``mapInPandas`` task over the edge list, like the
-reference runs it on one core. Graphs beyond ``wga.localKernelMaxEdges``
-raise rather than pretend to scale (the distributed consumers above are
-the answer there).
+runs inside ONE ``mapInPandas`` task over the edge list and the
+sources, like the reference runs it on one core. The shared size
+dispatch (``local_dispatch``) decides: an empty edge table or one of at
+most ``wga.localKernelMaxEdges`` rows runs (``local_mode=True``: any
+size); a larger graph raises rather than pretend to scale (the
+distributed consumers above are the answer there).
 
 Semantics mirrored from the reference:
 
@@ -29,13 +31,16 @@ Semantics mirrored from the reference:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from webgraph_algo_rs_spark.plans.superstep import SRC, DST, materialize
+from webgraph_algo_rs_spark.plans.local_csr import (
+    local_dispatch,
+    local_kernel_threshold,
+    run_local_kernel,
+    tagged,
+)
 
 
 def dfs_forest(
@@ -47,9 +52,9 @@ def dfs_forest(
 
     ``parent`` is NULL for roots. ``sources=None`` visits every vertex
     (ascending); an explicit list roots trees in list order and returns
-    only reached vertices. ``local_mode=True`` skips the size probe;
-    ``False`` raises (there is deliberately no distributed DFS — see
-    module docstring).
+    only reached vertices. ``local_mode=True`` runs any size; ``False``
+    raises (there is deliberately no distributed DFS — see module
+    docstring).
     """
     if local_mode is False:
         raise ValueError(
@@ -58,41 +63,38 @@ def dfs_forest(
             "components) at scale, or local_mode=True/None for graphs "
             "under wga.localKernelMaxEdges"
         )
-    from webgraph_algo_rs_spark.plans.local_csr import (
-        local_kernel_threshold,
-        probe_edge_count,
-    )
-
     spark = edges.sparkSession
-    if local_mode is not True:
-        thr = local_kernel_threshold(spark)
-        if thr <= 0 or probe_edge_count(edges.select(SRC, DST), thr) > thr:
-            raise ValueError(
-                "graph exceeds wga.localKernelMaxEdges "
-                f"({thr}); sequential DFS is single-node by nature — "
-                "raise the threshold (or pass local_mode=True) only if "
-                "one executor can hold the edge list"
-            )
-    src_list = None if sources is None else [int(s) for s in sources]
-    schema = (
-        "vertex bigint, root bigint, parent bigint, depth bigint,"
-        " pre bigint, post bigint"
+    tier, _ = local_dispatch(edges, local_mode)
+    if tier is None:
+        raise ValueError(
+            "graph exceeds wga.localKernelMaxEdges "
+            f"({local_kernel_threshold(spark)}); sequential DFS is single-node "
+            "by nature — raise the threshold (or pass local_mode=True) only "
+            "if one executor can hold the edge list"
+        )
+    roots = None
+    if sources is not None:
+        roots = spark.createDataFrame(
+            [(int(s), i) for i, s in enumerate(sources)], "source bigint, pos bigint"
+        )
+    return run_local_kernel(
+        tagged(edges, None if roots is None else (roots, "source", "pos")),
+        "vertex bigint, root bigint, parent bigint, depth bigint, pre bigint, post bigint",
+        _dfs_kernel(visit_all=sources is None),
     )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            if src_list:
-                # edgeless graph: every listed source is its own tree
-                yield _forest_of_isolates(src_list)
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        e_src = pdf[SRC].to_numpy(np.int64)
-        e_dst = pdf[DST].to_numpy(np.int64)
-        dom = [e_src, e_dst]
-        if src_list:
-            dom.append(np.asarray(src_list, dtype=np.int64))
-        verts = np.unique(np.concatenate(dom))
+
+def _dfs_kernel(visit_all: bool):
+    """The visit over the ``tagged`` frame: role 0 an edge, role 1 a
+    source ``(a=source, b=list position)``."""
+
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        role = pdf["role"].to_numpy(np.int8)
+        a = pdf["a"].to_numpy(np.int64)
+        b = pdf["b"].to_numpy(np.int64)
+        e_src, e_dst = a[role == 0], b[role == 0]
+        src_list = a[role == 1][np.argsort(b[role == 1], kind="stable")]
+        verts = np.unique(np.concatenate([e_src, e_dst, src_list]))
         nv = len(verts)
         src_i = np.searchsorted(verts, e_src)
         dst_i = np.searchsorted(verts, e_dst)
@@ -104,11 +106,7 @@ def dfs_forest(
         indptr = np.zeros(nv + 1, dtype=np.int64)
         np.cumsum(np.bincount(src_i, minlength=nv), out=indptr[1:])
 
-        roots = (
-            range(nv)
-            if src_list is None
-            else list(np.searchsorted(verts, np.asarray(src_list, dtype=np.int64)))
-        )
+        roots = range(nv) if visit_all else np.searchsorted(verts, src_list)
         visited = np.zeros(nv, dtype=bool)
         pre = np.full(nv, -1, dtype=np.int64)
         post = np.full(nv, -1, dtype=np.int64)
@@ -167,29 +165,6 @@ def dfs_forest(
         pc = pd.array(verts[np.maximum(pr, 0)], dtype="Int64")
         pc[pr < 0] = pd.NA
         out["parent"] = pc
-        yield out[["vertex", "root", "parent", "depth", "pre", "post"]]
+        return out[["vertex", "root", "parent", "depth", "pre", "post"]]
 
-    return materialize(
-        edges.select(SRC, DST).coalesce(1).mapInPandas(gen, schema=schema)
-    )
-
-
-def _forest_of_isolates(src_list: list[int]) -> pd.DataFrame:
-    seen: list[int] = []
-    have = set()
-    for s in src_list:
-        if s not in have:
-            have.add(s)
-            seen.append(s)
-    n = len(seen)
-    out = pd.DataFrame(
-        {
-            "vertex": np.asarray(seen, dtype=np.int64),
-            "root": np.asarray(seen, dtype=np.int64),
-            "depth": np.zeros(n, dtype=np.int64),
-            "pre": np.arange(n, dtype=np.int64),
-            "post": np.arange(n, dtype=np.int64),
-        }
-    )
-    out["parent"] = pd.array([pd.NA] * n, dtype="Int64")
-    return out[["vertex", "root", "parent", "depth", "pre", "post"]]
+    return kernel

@@ -38,7 +38,6 @@ Spark-first physical plan (never per-row Python):
 
 from __future__ import annotations
 
-import os
 import time
 from typing import Iterator
 
@@ -49,6 +48,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import BinaryType, DoubleType
 
 from webgraph_algo_rs_spark.functions.hll import HllParams
+from webgraph_algo_rs_spark.plans.local_csr import (
+    EMPTY,
+    LOCAL,
+    hyperball_kernel,
+    local_dispatch,
+    local_kernel_threshold,
+    run_local_kernel,
+    tagged,
+)
 from webgraph_algo_rs_spark.plans.superstep import (
     SRC,
     DST,
@@ -151,52 +159,66 @@ def hyperball(
     registers), so local mode also requires ``changed`` rows ≤ this cap
     — the same ceiling the merged-message broadcast uses.
     ``local_mode``: ``True`` forces the partition-local CSR kernel
-    (``plans/local_csr.hyperball_local`` — the whole systolic loop in
+    (``plans/local_csr.hyperball_kernel`` — the whole systolic loop in
     one task, bit-identical outputs and iteration count), ``False``
-    forbids it, ``None`` auto-picks it under ``wga.localKernelMaxEdges``
-    edges when no explicit physical strategy (``n_salt``) was
-    requested. In local-kernel runs ``stats["local_supersteps"]``
-    equals ``iterations`` (every superstep is frontier-local by
-    construction).
+    forbids it, ``None`` picks it by the shared size dispatch
+    (``plans/local_csr.local_dispatch``) when no explicit physical
+    strategy (``n_salt``) was requested, with the edge cap
+    ``wga.localKernelMaxEdges // m``.
+
+    ``stats`` also receive ``tier``: ``empty`` (no edge rows: no
+    superstep, ``neighbourhood_function == [0.0]``), ``local-csr`` or
+    ``supersteps`` (the distributed loop), plus ``wall_sec`` and
+    ``local_supersteps`` (supersteps that ran frontier-local — every
+    one on the ``local-csr`` tier).
     """
     params = HllParams(log2m=log2m, seed=seed, hasher=hasher, n_upper=n_upper)
-    if local_mode is not False and (local_mode or n_salt == 0):
-        from webgraph_algo_rs_spark.plans.local_csr import (
-            hyperball_local,
-            local_kernel_threshold,
-            probe_edge_count,
-        )
+    spark = edges.sparkSession
+    schema = (
+        "vertex bigint, reachable double, sum_distances double, closeness double,"
+        " harmonic double, lin double, nieminen double"
+        + (", discounted double" if discount is not None else "")
+    )
+    # a HyperBall superstep moves E·m register BYTES (not E rows like
+    # BFS/PageRank), and the dense early supersteps touch every edge —
+    # measured on a cnr-2000-shaped graph the single-core kernel costs
+    # ~20 s/superstep while 32 distributed cores do it in ~1.5 s. Scale
+    # the edge cap down by m so the local path only claims graphs whose
+    # whole run is genuinely cheaper than the per-superstep driver
+    # barriers it saves.
+    tier, _ = local_dispatch(
+        edges,
+        local_mode,
+        cap=local_kernel_threshold(spark) // params.m,
+        auto=n_salt == 0,
+    )
+    t0 = time.time()
 
-        spark = edges.sparkSession
-        # a HyperBall superstep moves E·m register BYTES (not E rows
-        # like BFS/PageRank), and the dense early supersteps touch every
-        # edge — measured on a cnr-2000-shaped graph the single-core
-        # kernel costs ~20 s/superstep while 32 distributed cores do it
-        # in ~1.5 s. Scale the edge threshold down by m so the local
-        # path only claims graphs whose whole run is genuinely cheaper
-        # than the per-superstep driver barriers it saves.
-        thr = local_kernel_threshold(spark) // params.m
-        if local_mode or (
-            thr > 0 and 0 < probe_edge_count(edges.select(SRC, DST), thr) <= thr
-        ):
-            t0 = time.time()
-            out = hyperball_local(
-                edges, node_weights, params, max_iter, rel_threshold, discount
+    def record(name, iterations, nf, local_steps):
+        if stats is not None:
+            stats.update(
+                tier=name,
+                iterations=int(iterations),
+                neighbourhood_function=list(nf),
+                wall_sec=time.time() - t0,
+                local_supersteps=int(local_steps),
             )
-            if stats is not None:
-                head = out.select("iterations", "nf").filter(
-                    F.col("nf").isNotNull()
-                ).first()
-                iters = int(head["iterations"]) if head is not None else 0
-                stats.update(
-                    iterations=iters,
-                    neighbourhood_function=(
-                        [float(x) for x in head["nf"]] if head is not None else [0.0]
-                    ),
-                    wall_sec=time.time() - t0,
-                    local_supersteps=iters,
-                )
-            return out.drop("iterations", "nf")
+
+    if tier == EMPTY:
+        record(EMPTY, 0, [0.0], 0)
+        return spark.createDataFrame([], schema)
+    if tier == LOCAL:
+        out = run_local_kernel(
+            tagged(edges, None if node_weights is None else (node_weights, "vertex", "weight")),
+            schema + ", iterations int, nf array<double>",
+            hyperball_kernel(
+                params, max_iter, rel_threshold, discount, node_weights is not None
+            ),
+        )
+        if stats is not None:
+            head = out.select("iterations", "nf").filter(F.col("nf").isNotNull()).first()
+            record(LOCAL, head["iterations"], head["nf"], head["iterations"])
+        return out.drop("iterations", "nf")
     merge = _group_merge_factory(params)
 
     @F.pandas_udf(BinaryType())
@@ -270,7 +292,6 @@ def hyperball(
     changed = n_vertices  # superstep 1 scatters everyone
     local_steps = 0
     it = 0
-    t_start = time.time()
     for it in range(1, max_iter + 1):
         # local mode (reference pre-local/local, hyperball_impl.rs:795-835):
         # a collapsed frontier is cheaper to ship to every executor than
@@ -361,13 +382,6 @@ def hyperball(
         ).first()
         state = stepped
         changed = int(agg["nc"] or 0)
-        if os.environ.get("WGA_HB_VERBOSE"):
-            print(
-                f"hyperball iter {it} changed {changed} "
-                f"nf {float(agg['nf'] or 0.0):.1f} "
-                f"elapsed {time.time() - t_start:.1f}s",
-                flush=True,
-            )
         nf.append(max(float(agg["nf"] or 0.0), nf[-1]))  # monotone clamp :905-916
         if changed == 0:
             break
@@ -379,13 +393,7 @@ def hyperball(
         ):
             break
 
-    if stats is not None:
-        stats.update(
-            iterations=it,
-            neighbourhood_function=nf,
-            wall_sec=time.time() - t_start,
-            local_supersteps=local_steps,
-        )
+    record("supersteps", it, nf, local_steps)
 
     count2 = F.col("est") * F.col("est")
     cols = [

@@ -10,6 +10,13 @@ explodes a join). The closing check is a semi-join back into ``E'``.
 
 Per-vertex counts: every triangle (u,v,w) credits all three corners
 (explode + groupBy count).
+
+Size dispatch is ``plans/local_csr.local_dispatch``, recorded as
+``stats["tier"]``: ``empty`` (no edge rows: no counts, global 0),
+``local-csr`` (at most ``wga.localKernelMaxEdges`` edges, or
+``local_mode=True``: the whole count is one vectorized CSR task — the
+join plan's two shuffles are pure overhead at that size) or
+``distributed-join`` (the plan above; ``local_mode=False`` forces it).
 """
 
 from __future__ import annotations
@@ -18,44 +25,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webgraph_algo_rs_spark.plans.local_csr import (
-    local_kernel_threshold,
-    probe_edge_count,
+    LOCAL,
+    local_dispatch,
     run_local_kernel,
     triangles_kernel,
 )
 from webgraph_algo_rs_spark.plans.superstep import (
+    DST,
+    SRC,
     graph_vertices,
     materialize,
     undirected_canonical,
 )
 
+SCHEMA = "vertex bigint, n_triangles bigint"
+
 
 def _local_counts(
-    edges: DataFrame, local_mode: bool | None, stats: dict | None = None
+    edges: DataFrame, local_mode: bool | None, stats: dict | None
 ) -> DataFrame | None:
-    """Size dispatch (see ``components.py``): below
-    ``wga.localKernelMaxEdges`` the whole count runs as one vectorized
-    CSR task — the distributed plan's two shuffled joins are pure
-    overhead at that size. Returns ``None`` when the graph must stay on
-    the distributed join plan (the 100 TB path). The probe is capped at
-    the threshold, so dispatch never scans a huge edge table."""
-    if local_mode is False:
-        if stats is not None:
-            stats["tier"] = "distributed-join"
-        return None
-    thr = local_kernel_threshold(edges.sparkSession)
-    if not local_mode and probe_edge_count(edges, thr) > thr:
-        if stats is not None:
-            stats["tier"] = "distributed-join"
-        return None
+    """Per-vertex counts from the empty or local-CSR tier
+    (``local_dispatch``), or ``None`` for the distributed join plan;
+    ``stats["tier"]`` names the tier."""
+    tier, _ = local_dispatch(edges, local_mode)
     if stats is not None:
-        stats["tier"] = "local-csr"
-    return run_local_kernel(
-        edges,
-        "vertex bigint, n_triangles bigint",
-        triangles_kernel(),
-        with_weight=False,
-    )
+        stats["tier"] = tier or "distributed-join"
+    if tier is None:
+        return None
+    if tier == LOCAL:
+        return run_local_kernel(edges.select(SRC, DST), SCHEMA, triangles_kernel())
+    return edges.sparkSession.createDataFrame([], SCHEMA)
 
 
 def _oriented(edges: DataFrame) -> DataFrame:

@@ -7,12 +7,15 @@ supersteps over one edge table. Each operator subclasses
 plan, stop aggregates/test and local-CSR kernel; this module owns the rest.
 
 **Size dispatch** (:func:`dispatch`) picks one physical tier per call,
-recorded as ``stats["tier"]``:
+recorded as ``stats["tier"]``. The ``empty`` / ``local-csr`` choice is
+``plans/local_csr.local_dispatch``, shared with every operator that has
+a local kernel; this module adds the two superstep tiers:
 
 * ``empty`` — the edge table has no rows; nothing runs.
-* ``local-csr`` — at most ``wga.localKernelMaxEdges`` edges and no other
-  strategy requested: the whole loop runs inside one Arrow-batched task
-  (``plans/local_csr.py``). ``local_mode=True`` forces it.
+* ``local-csr`` — at most ``min(wga.localKernelMaxEdges,
+  wga.bucketizeMinEdges)`` edges and no checkpoint, ``block_size`` or
+  ``bucketize_edges`` requested: the whole loop runs inside one
+  Arrow-batched task. ``local_mode=True`` forces it.
 * ``blocked`` — supersteps as DataFrame joins, ``k`` chained per Spark
   action (below).
 * ``persist-chain`` — above ``wga.bucketizeMinEdges`` edges (or with
@@ -23,9 +26,9 @@ recorded as ``stats["tier"]``:
   loses at 10⁸ edges (measured OOM at 157M edges / 28g heap). Only
   ``local_mode=True`` keeps a graph of that size off this tier.
 
-One capped ``probe_edge_count`` decides: it never scans more than
-``max(wga.localKernelMaxEdges, wga.bucketizeMinEdges) + 1`` rows (one row
-when ``bucketize_edges`` already fixes the tier).
+One capped ``probe_edge_count`` decides all four: it never scans more
+than ``wga.bucketizeMinEdges + 1`` rows (one row when ``local_mode=True``
+or ``bucketize_edges`` already fixes the tier).
 
 **Superstep blocking.** The state frame carries each carried column
 suffixed by step: ``rank0`` is the state entering the block, and the
@@ -63,12 +66,14 @@ from pyspark.sql import functions as F
 from webgraph_algo_rs_spark.checkpoint import CheckpointManager
 from webgraph_algo_rs_spark.plans.local_csr import (
     bucketize_min_edges,
+    local_dispatch,
     local_kernel_threshold,
-    probe_edge_count,
     run_local_kernel,
 )
 from webgraph_algo_rs_spark.plans.superstep import (
+    DST,
     SRC,
+    W,
     PersistChain,
     materialize,
     pin_edges,
@@ -83,9 +88,11 @@ def dispatch(
     local_mode: bool | None,
 ) -> tuple[str, int]:
     """``(tier, probed edge count)`` for one call (module docstring); the
-    count is exact on the ``blocked`` tier. ``local_mode``: ``True``
-    forces the local kernel, ``False`` forbids it, ``None`` picks it by
-    size when no checkpoint or ``block_size`` was requested."""
+    count is exact on the ``blocked`` tier. ``local_dispatch`` makes the
+    ``empty`` / ``local-csr`` choice (auto only without a checkpoint, a
+    ``block_size`` or ``bucketize_edges``, and never above
+    ``wga.bucketizeMinEdges``); the same probe, scanned up to
+    ``wga.bucketizeMinEdges``, picks ``blocked`` or ``persist-chain``."""
     if local_mode and (checkpoint is not None or bucketize_edges):
         # an explicit force must not be silently overridden: the local
         # kernel runs the whole loop inside one task, so per-superstep
@@ -95,17 +102,18 @@ def dispatch(
             + ("checkpoint" if checkpoint is not None else "bucketize_edges")
         )
     spark = edges.sparkSession
-    thr, big_thr = local_kernel_threshold(spark), bucketize_min_edges(spark)
-    n_edges = probe_edge_count(edges, 0 if bucketize_edges else max(thr, big_thr))
-    if n_edges == 0:
-        return "empty", 0
-    if local_mode:
-        return "local-csr", n_edges
+    big_thr = bucketize_min_edges(spark)
+    tier, n_edges = local_dispatch(
+        edges,
+        local_mode,
+        cap=min(local_kernel_threshold(spark), big_thr),
+        auto=checkpoint is None and block_size is None and not bucketize_edges,
+        probe_to=0 if bucketize_edges else big_thr,
+    )
+    if tier is not None:
+        return tier, n_edges
     if bucketize_edges or n_edges > big_thr:
         return "persist-chain", n_edges
-    auto = local_mode is None and checkpoint is None and block_size is None
-    if auto and n_edges <= thr:
-        return "local-csr", n_edges
     return "blocked", n_edges
 
 
@@ -180,10 +188,9 @@ class Fixpoint:
             return spark.createDataFrame([], self.schema)
         if self.tier == "local-csr":
             out = run_local_kernel(
-                edges,
+                edges.select(SRC, DST, *([W] if self.with_weight else [])),
                 f"{self.schema}, iterations int, {self.metric} {self.metric_type}",
                 self.kernel(max_iter),
-                with_weight=self.with_weight,
             )
             if stats is not None:
                 head = out.select("iterations", self.metric).first()

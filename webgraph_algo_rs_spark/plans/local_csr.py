@@ -11,8 +11,11 @@ superstep, zero shuffles, zero per-superstep driver barriers.
 
 This mirrors the classic engine dichotomy (broadcast-hash vs
 shuffle-hash join): the *logical* operator is identical, the planner
-picks the physical strategy by size. The threshold is deliberately
-conservative (default 8M edges ≈ 128 MB of int64 arrays — far below
+picks the physical strategy by size. This module owns both halves of
+that boundary for every operator with a local kernel (PageRank, CC,
+LPA, triangles, BFS, HyperBall, DFS): :func:`local_dispatch` is the
+one size decision and :func:`run_local_kernel` the one single-task
+hand-off. The threshold is deliberately conservative (default 8M edges ≈ 128 MB of int64 arrays — far below
 one executor's memory, and ~2 orders of magnitude under what a 4 GiB
 worker could actually hold) so that anything near cluster scale takes
 the distributed path; at 100 TB the local path is only ever reached by
@@ -37,8 +40,8 @@ choosing it *per subgraph* under a distributed planner.
 
 from __future__ import annotations
 
+from functools import reduce
 from itertools import count
-
 from typing import Callable, Iterator
 
 import numpy as np
@@ -50,8 +53,6 @@ from webgraph_algo_rs_spark.plans.superstep import SRC, DST, W, materialize
 
 LOCAL_KERNEL_MAX_EDGES_CONF = "wga.localKernelMaxEdges"
 LOCAL_KERNEL_MAX_EDGES_DEFAULT = 8_000_000
-LOCAL_BFS_MAX_SOURCES_CONF = "wga.localBfsMaxSources"
-LOCAL_BFS_MAX_SOURCES_DEFAULT = 512
 
 
 def local_kernel_threshold(spark) -> int:
@@ -95,32 +96,86 @@ def probe_edge_count(edges: DataFrame, threshold: int) -> int:
     return edges.limit(threshold + 1).count()
 
 
-def run_local_kernel(
+EMPTY, LOCAL = "empty", "local-csr"
+
+
+def local_dispatch(
     edges: DataFrame,
+    local_mode: bool | None,
+    cap: int | None = None,
+    auto: bool = True,
+    probe_to: int = 0,
+) -> tuple[str | None, int]:
+    """The local-vs-not decision of every operator with a local kernel:
+    ``(tier, n)`` with tier ``"empty"`` (no edge rows), ``"local-csr"``
+    (run the kernel through :func:`run_local_kernel`) or ``None`` (the
+    operator's distributed plan).
+
+    ``local_mode=True`` forces the kernel and ``False`` forbids it;
+    ``None`` picks it when ``auto`` holds, ``0 < cap`` and the edge count
+    is ≤ ``cap`` (default ``wga.localKernelMaxEdges``). One capped
+    :func:`probe_edge_count` decides: ``n`` is exact up to ``max(cap,
+    probe_to)`` when auto applies, else up to ``probe_to`` (the caller's
+    own next size threshold); with ``local_mode=True`` it only tells
+    empty from not."""
+    if cap is None:
+        cap = local_kernel_threshold(edges.sparkSession)
+    auto = local_mode is None and auto and cap > 0
+    n = probe_edge_count(edges, 0 if local_mode else max(cap if auto else 0, probe_to))
+    if n == 0:
+        return EMPTY, 0
+    if local_mode or (auto and n <= cap):
+        return LOCAL, n
+    return None, n
+
+
+def tagged(edges: DataFrame, *inputs: tuple[DataFrame, str, str] | None) -> DataFrame:
+    """One ``(role, a, b)`` frame for a kernel with more inputs than the
+    edges: role 0 is an edge ``(src, dst)``; role ``i`` is a row of the
+    ``i``-th extra input ``(frame, a column, b column)`` (``None`` keeps
+    its role number and adds no rows). The union lets
+    :func:`run_local_kernel` hand everything to the one task without a
+    driver collect."""
+    specs = [(edges, SRC, DST), *inputs]
+    parts = [
+        spec[0].select(
+            F.lit(role).cast("tinyint").alias("role"),
+            F.col(spec[1]).cast("long").alias("a"),
+            F.col(spec[2]).cast("long").alias("b"),
+        )
+        for role, spec in enumerate(specs)
+        if spec is not None
+    ]
+    return reduce(DataFrame.unionByName, parts)
+
+
+def run_local_kernel(
+    frame: DataFrame,
     schema: str,
-    kernel: Callable[[pd.DataFrame], pd.DataFrame],
-    with_weight: bool = True,
+    kernel: Callable[[pd.DataFrame], pd.DataFrame | Iterator[pd.DataFrame]],
 ) -> DataFrame:
-    """Run ``kernel`` over the FULL edge table inside one executor task.
+    """Run ``kernel`` over the WHOLE ``frame`` inside one executor task.
 
     ``coalesce(1)`` merges partitions without a shuffle; ``mapInPandas``
     streams them Arrow-batched into a single python worker, which
-    accumulates and runs the vectorized kernel once. The result is
-    eagerly materialized (one Spark job) so callers can harvest
-    stats columns with a free ``first()``.
+    concatenates the non-empty batches and calls the kernel once (never
+    on empty input). The kernel returns one frame or yields several. The
+    result is eagerly materialized (one Spark job), so callers can
+    harvest stats columns with a free ``first()`` and re-read it without
+    re-running the kernel.
     """
-    cols = [SRC, DST] + ([W] if with_weight else [])
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = list(batches)
+        parts = [b for b in batches if len(b)]
         if not parts:
             return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        if len(pdf) == 0:
-            return
-        yield kernel(pdf)
+        out = kernel(pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0])
+        if isinstance(out, pd.DataFrame):
+            yield out
+        else:
+            yield from out
 
-    return materialize(edges.select(*cols).coalesce(1).mapInPandas(gen, schema=schema))
+    return materialize(frame.coalesce(1).mapInPandas(gen, schema=schema))
 
 
 def _vertex_index(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
@@ -232,85 +287,22 @@ def cc_kernel(max_iter: int) -> Callable[[pd.DataFrame], pd.DataFrame]:
 _EMIT_ROWS = 500_000  # buffered kernel output rows per Arrow batch
 
 
-def bfs_local(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_depth: int | None,
-    predecessors: bool,
-    vertex_filter: DataFrame | None,
-) -> DataFrame:
-    """Local-CSR form of ``operators.bfs.bfs_distances``: every flood
-    runs level-synchronously inside ONE ``mapInPandas`` task — one Spark
-    job total instead of one join+agg+localCheckpoint barrier *per BFS
-    level per call* (the directed-ESS profile: ~90-level floods ×
-    ~0.5 s/level × dozens of sweep rounds).
-
-    All three inputs ride one union-encoded frame (``role``: 0 = edge
-    ``(a=src, b=dst)``, 1 = source ``(a=s)``, 2 = filter row — per-flood
-    ``(a=source, b=vertex)`` or global ``(b=vertex)``), so nothing is
-    collected to the driver and ``coalesce(1)`` merges partitions
-    without a shuffle. Semantics mirror the distributed loop exactly:
-    filter applied at discovery time *including sources*, unreached
-    vertices absent, ``pred`` = minimum discovering predecessor.
-    """
-    per_source = vertex_filter is not None and "source" in vertex_filter.columns
-    parts = [
-        edges.select(
-            F.lit(0).cast("tinyint").alias("role"),
-            F.col(SRC).cast("long").alias("a"),
-            F.col(DST).cast("long").alias("b"),
-        ),
-        sources.select(
-            F.lit(1).cast("tinyint").alias("role"),
-            F.col("source").cast("long").alias("a"),
-            F.col("source").cast("long").alias("b"),
-        ),
-    ]
-    if vertex_filter is not None:
-        parts.append(
-            vertex_filter.select(
-                F.lit(2).cast("tinyint").alias("role"),
-                (F.col("source") if per_source else F.col("vertex"))
-                .cast("long")
-                .alias("a"),
-                F.col("vertex").cast("long").alias("b"),
-            )
-        )
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-    schema = "source bigint, vertex bigint, distance bigint" + (
-        ", pred bigint" if predecessors else ""
-    )
-    kernel = bfs_kernel(
-        max_depth, predecessors, vertex_filter is not None, per_source
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts_ = [b for b in batches if len(b)]
-        if not parts_:
-            return
-        pdf = pd.concat(parts_, ignore_index=True) if len(parts_) > 1 else parts_[0]
-        yield from kernel(pdf)
-
-    out = unioned.coalesce(1).mapInPandas(gen, schema=schema)
-    # pin like the distributed path: callers re-join the visited set
-    # (ESS uses each flood several times) — without this every reuse
-    # would re-run the whole kernel. Measured negative result: inserting
-    # repartition(shuffle.partitions) here to parallelize downstream
-    # exchanges made cnr-2000 ESS rounds ~60% SLOWER (the serial
-    # reshuffle of a ~12M-row flood costs more than the single-partition
-    # exchange maps it replaces) — keep the output single-partition.
-    return materialize(out)
-
-
 def bfs_kernel(
     max_depth: int | None, predecessors: bool, has_filter: bool, per_source: bool
 ) -> Callable[[pd.DataFrame], Iterator[pd.DataFrame]]:
-    """Vectorized multi-source BFS over the union-encoded input frame
-    (see :func:`bfs_local`). Yields buffered row batches.
-    ``max_depth=None`` = until the frontier empties (see
-    ``operators.bfs.bfs_distances`` — a finite cap silently truncates)."""
+    """Local-CSR form of ``operators.bfs.bfs_distances``: every flood
+    runs level-synchronously inside the one kernel task — one Spark job
+    per call instead of one join+agg+localCheckpoint barrier *per BFS
+    level* (the directed-ESS profile: ~90-level floods × ~0.5 s/level ×
+    dozens of sweep rounds). Yields buffered row batches.
+
+    Input: the :func:`tagged` frame — role 0 an edge ``(a=src, b=dst)``,
+    role 1 a source ``(a=s)``, role 2 a filter row, per-flood ``(a=source,
+    b=vertex)`` or global ``(b=vertex)``. Semantics mirror the
+    distributed loop exactly: filter applied at discovery time
+    *including sources*, unreached vertices absent, ``pred`` = minimum
+    discovering predecessor. ``max_depth=None`` = until the frontier
+    empties (a finite cap silently truncates)."""
 
     def _depths():
         return count(1) if max_depth is None else range(1, max_depth + 1)
@@ -452,19 +444,14 @@ def bfs_kernel(
     return kernel
 
 
-def hyperball_local(
-    edges: DataFrame,
-    node_weights: DataFrame | None,
-    params,
-    max_iter: int,
-    rel_threshold: float | None,
-    discount,
-) -> DataFrame:
+def hyperball_kernel(
+    params, max_iter: int, rel_threshold: float | None, discount, weighted: bool
+) -> Callable[[pd.DataFrame], pd.DataFrame]:
     """Local-CSR HyperBall (see ``operators/hyperball.py`` for the
     distributed plan and the reference contract): the whole systolic
-    max-merge loop runs inside ONE ``mapInPandas`` task over a
-    ``(nv, m)`` uint8 register matrix — grouped ``np.maximum.reduceat``
-    per superstep on the delta-frontier edge subset, zero shuffles.
+    max-merge loop runs inside the one kernel task over a ``(nv, m)``
+    uint8 register matrix — grouped ``np.maximum.reduceat`` per superstep
+    on the delta-frontier edge subset, zero shuffles.
 
     Bit-parity with the distributed loop: register content after
     max-merges is order-independent integers, estimates and the
@@ -474,41 +461,14 @@ def hyperball_local(
     iteration counts and all output columns agree exactly (pinned by
     ``tests/test_hyperball.py::test_hyperball_local_matches_distributed``).
 
-    Returns the centrality frame plus bookkeeping columns
-    ``iterations`` (every row) and ``nf`` (non-null on one row only —
-    the monotone-clamped neighbourhood function).
+    Input: the :func:`tagged` frame — role 0 an edge, role 1 a node
+    weight ``(a=vertex, b=weight)``; ``weighted`` says a weight frame was
+    given (missing vertices weigh 1). Returns the centrality frame plus
+    bookkeeping columns ``iterations`` (every row) and ``nf`` (non-null
+    on one row only — the monotone-clamped neighbourhood function).
     """
-    has_w = node_weights is not None
-    parts = [
-        edges.select(
-            F.lit(0).cast("tinyint").alias("role"),
-            F.col(SRC).cast("long").alias("a"),
-            F.col(DST).cast("long").alias("b"),
-        )
-    ]
-    if has_w:
-        parts.append(
-            node_weights.select(
-                F.lit(1).cast("tinyint").alias("role"),
-                F.col("vertex").cast("long").alias("a"),
-                F.col("weight").cast("long").alias("b"),
-            )
-        )
-    unioned = parts[0]
-    for p in parts[1:]:
-        unioned = unioned.unionByName(p)
-    schema = (
-        "vertex bigint, reachable double, sum_distances double, closeness double,"
-        " harmonic double, lin double, nieminen double"
-        + (", discounted double" if discount is not None else "")
-        + ", iterations int, nf array<double>"
-    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts_ = [bt for bt in batches if len(bt)]
-        if not parts_:
-            return
-        pdf = pd.concat(parts_, ignore_index=True) if len(parts_) > 1 else parts_[0]
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         role = pdf["role"].to_numpy(np.int8)
         a = pdf["a"].to_numpy(np.int64)
         b = pdf["b"].to_numpy(np.int64)
@@ -519,14 +479,12 @@ def hyperball_local(
         # max-merge) — same as the distributed arcs distinct+filter
         verts = np.unique(np.concatenate([e_src_raw, e_dst_raw]))
         nv = len(verts)
-        if nv == 0:
-            return
         keep = e_src_raw != e_dst_raw
         src_i = np.searchsorted(verts, e_src_raw[keep])
         dst_i = np.searchsorted(verts, e_dst_raw[keep])
 
         m = params.m
-        if has_w:
+        if weighted:
             wmap = np.ones(nv, dtype=np.int64)
             wv = np.searchsorted(verts, a[role == 1])
             inb = (wv < nv) & (verts[np.minimum(wv, nv - 1)] == a[role == 1])
@@ -617,9 +575,9 @@ def hyperball_local(
         nf_col = [None] * nv
         nf_col[0] = nf
         pdf_out["nf"] = nf_col
-        yield pdf_out
+        return pdf_out
 
-    return materialize(unioned.coalesce(1).mapInPandas(gen, schema=schema))
+    return kernel
 
 
 def lpa_kernel(max_iter: int) -> Callable[[pd.DataFrame], pd.DataFrame]:
