@@ -11,8 +11,8 @@ and one 50-vertex cycle.
 * The other operators with a local kernel (both triangle counts, BFS,
   DFS, HyperBall) with ``local_mode`` True, False and None: schema, row
   count, the same rows on every tier and the recorded tier; and every
-  operator leaving the local-CSR tier at the same
-  ``wga.localKernelMaxEdges`` (HyperBall at m times it).
+  operator with a local kernel (SCC too) leaving the local-CSR tier at
+  the same ``wga.localKernelMaxEdges`` (HyperBall at m times it).
 """
 
 import pytest
@@ -35,6 +35,7 @@ from webgraph_algo_rs_spark.operators import (
     radius_diameter_directed,
     radius_directed,
     radius_undirected,
+    strongly_connected_components,
     triangle_count_global,
     triangle_count_per_vertex,
 )
@@ -281,6 +282,7 @@ SWITCH_OPS = {
     "bfs": (_bfs_tier, "supersteps"),
     "dfs": (_dfs_tier, "raises"),
     "hyperball": (_stats_tier(hyperball, log2m=4, max_iter=2), "supersteps"),
+    "scc": (_stats_tier(strongly_connected_components), "supersteps"),
 }
 
 

@@ -115,7 +115,8 @@ def bfs_distances(
             + (", pred bigint" if predecessors else ""),
             bfs_kernel(max_depth, predecessors, vertex_filter is not None, per_source),
         )
-    e = edges.select(SRC, DST).distinct()
+    # pinned once: every level joins it, and the distinct() is a shuffle
+    e = materialize(edges.select(SRC, DST).distinct())
     seeds = sources.select("source", F.col("source").alias("vertex"))
     fcols = None
     if vertex_filter is not None:
