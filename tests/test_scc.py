@@ -27,22 +27,8 @@ from webgraph_algo_rs_spark.operators.topsort import is_acyclic
 
 
 def scc_map(spark, arcs):
-    """Components from the default (local-CSR) tier; the distributed
-    rounds, forced by ``wga.localKernelMaxEdges=0``, must agree."""
-    edges = edge_df(spark, arcs)
-    got = {}
-    for cap in (None, "0"):
-        stats: dict = {}
-        if cap is not None:
-            spark.conf.set("wga.localKernelMaxEdges", cap)
-        try:
-            df = strongly_connected_components(edges, stats=stats)
-            got[stats["tier"]] = {r.vertex: r.component for r in df.collect()}
-        finally:
-            spark.conf.unset("wga.localKernelMaxEdges")
-    assert list(got) == ["local-csr", "supersteps"]
-    assert got["local-csr"] == got["supersteps"]
-    return got["local-csr"]
+    df = strongly_connected_components(edge_df(spark, arcs))
+    return {r.vertex: r.component for r in df.collect()}
 
 
 @pytest.mark.parametrize(

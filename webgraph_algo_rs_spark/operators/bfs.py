@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webgraph_algo_rs_spark.plans.local_csr import (
-    LOCAL,
     bfs_kernel,
     local_dispatch,
     probe_edge_count,
@@ -86,7 +85,7 @@ def bfs_distances(
     per_source = vertex_filter is not None and "source" in vertex_filter.columns
     tier, _ = local_dispatch(edges, local_mode)
     if (
-        tier == LOCAL
+        tier == "local-csr"
         and local_mode is None
         and not per_source
         and probe_edge_count(sources, LOCAL_BFS_MAX_SOURCES) > LOCAL_BFS_MAX_SOURCES
@@ -98,7 +97,7 @@ def bfs_distances(
         # filter bounds output by the filter's row count, so the per-SCC
         # flood pattern stays local at any SCC count.
         tier = None
-    if tier == LOCAL:
+    if tier == "local-csr":
         # the result is pinned like the distributed path's: callers
         # re-join the visited set (ESS uses each flood several times).
         # Measured negative result: a repartition(shuffle.partitions) of
@@ -115,8 +114,7 @@ def bfs_distances(
             + (", pred bigint" if predecessors else ""),
             bfs_kernel(max_depth, predecessors, vertex_filter is not None, per_source),
         )
-    # pinned once: every level joins it, and the distinct() is a shuffle
-    e = materialize(edges.select(SRC, DST).distinct())
+    e = edges.select(SRC, DST).distinct()
     seeds = sources.select("source", F.col("source").alias("vertex"))
     fcols = None
     if vertex_filter is not None:

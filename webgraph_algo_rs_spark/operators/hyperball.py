@@ -49,8 +49,6 @@ from pyspark.sql.types import BinaryType, DoubleType
 
 from webgraph_algo_rs_spark.functions.hll import HllParams
 from webgraph_algo_rs_spark.plans.local_csr import (
-    EMPTY,
-    LOCAL,
     hyperball_kernel,
     local_dispatch,
     local_kernel_threshold,
@@ -204,10 +202,10 @@ def hyperball(
                 local_supersteps=int(local_steps),
             )
 
-    if tier == EMPTY:
-        record(EMPTY, 0, [0.0], 0)
+    if tier == "empty":
+        record("empty", 0, [0.0], 0)
         return spark.createDataFrame([], schema)
-    if tier == LOCAL:
+    if tier == "local-csr":
         out = run_local_kernel(
             tagged(edges, None if node_weights is None else (node_weights, "vertex", "weight")),
             schema + ", iterations int, nf array<double>",
@@ -217,7 +215,7 @@ def hyperball(
         )
         if stats is not None:
             head = out.select("iterations", "nf").filter(F.col("nf").isNotNull()).first()
-            record(LOCAL, head["iterations"], head["nf"], head["iterations"])
+            record("local-csr", head["iterations"], head["nf"], head["iterations"])
         return out.drop("iterations", "nf")
     merge = _group_merge_factory(params)
 

@@ -26,11 +26,6 @@ from DataFrame supersteps:
 4. Remove finished SCCs, repeat. Every phase is a data-parallel
    superstep; rounds scale with the SCC-DAG's chain structure, not n.
 
-A graph of at most ``wga.localKernelMaxEdges`` edge rows skips the
-rounds: the shared size dispatch (``plans/local_csr.local_dispatch``)
-runs Tarjan itself inside one task (``plans/local_csr.scc_kernel``),
-with the same canonical labels.
-
 ``scc_condensation`` mirrors ``SccGraph``
 (`src/algo/exact_sum_sweep/scc_graph.rs:109-221`): one row per DAG
 edge, keeping the concrete bridge arc maximizing
@@ -46,12 +41,6 @@ import time
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from webgraph_algo_rs_spark.plans.local_csr import (
-    LOCAL,
-    local_dispatch,
-    run_local_kernel,
-    scc_kernel,
-)
 from webgraph_algo_rs_spark.plans.superstep import (
     SRC,
     DST,
@@ -74,26 +63,8 @@ def strongly_connected_components(
     stats: dict | None = None,
 ) -> DataFrame:
     """Returns ``(vertex:bigint, component:bigint)``; ``component`` is
-    the min vertex id of the SCC (Tarjan-oracle-canonical).
-
-    The shared size dispatch (``plans/local_csr.local_dispatch``) picks
-    the tier, recorded as ``stats["tier"]``: ``empty`` (no edge rows: no
-    rows, no round), ``local-csr`` (at most ``wga.localKernelMaxEdges``
-    edge rows: Tarjan inside one task, ``plans/local_csr.scc_kernel``)
-    or ``supersteps`` (the rounds above; ``max_rounds`` bounds them)."""
+    the min vertex id of the SCC (Tarjan-oracle-canonical)."""
     spark = edges.sparkSession
-    t_start = time.time()
-    tier, _ = local_dispatch(edges, None)
-    if tier is not None:
-        if tier == LOCAL:
-            out = run_local_kernel(
-                edges.select(SRC, DST), "vertex bigint, component bigint", scc_kernel()
-            )
-        else:
-            out = spark.createDataFrame([], "vertex bigint, component bigint")
-        if stats is not None:
-            stats.update(tier=tier, rounds=0, wall_sec=time.time() - t_start)
-        return out
     arcs = materialize(
         edges.select(SRC, DST).filter(F.col(SRC) != F.col(DST)).distinct()
     )
@@ -102,6 +73,7 @@ def strongly_connected_components(
     # bounded-depth result plan over many trim/peel rounds (VERDICT r1:
     # one union child per round blows up Catalyst on deep graphs)
     done = UnionAccumulator()
+    t_start = time.time()
     rounds = 0
 
     for rounds in range(1, max_rounds + 1):
@@ -177,9 +149,7 @@ def strongly_connected_components(
             break
 
     if stats is not None:
-        stats.update(
-            tier="supersteps", rounds=rounds, wall_sec=time.time() - t_start
-        )
+        stats.update(rounds=rounds, wall_sec=time.time() - t_start)
     out = done.result()
     if out is None:
         return spark.createDataFrame([], "vertex bigint, component bigint")

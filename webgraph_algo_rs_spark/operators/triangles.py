@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from webgraph_algo_rs_spark.plans.local_csr import (
-    LOCAL,
     local_dispatch,
     run_local_kernel,
     triangles_kernel,
@@ -52,7 +51,7 @@ def _local_counts(
         stats["tier"] = tier or "distributed-join"
     if tier is None:
         return None
-    if tier == LOCAL:
+    if tier == "local-csr":
         return run_local_kernel(edges.select(SRC, DST), SCHEMA, triangles_kernel())
     return edges.sparkSession.createDataFrame([], SCHEMA)
 

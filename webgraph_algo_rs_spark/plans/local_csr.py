@@ -13,7 +13,7 @@ This mirrors the classic engine dichotomy (broadcast-hash vs
 shuffle-hash join): the *logical* operator is identical, the planner
 picks the physical strategy by size. This module owns both halves of
 that boundary for every operator with a local kernel (PageRank, CC,
-LPA, triangles, BFS, HyperBall, DFS, SCC): :func:`local_dispatch` is the
+LPA, triangles, BFS, HyperBall, DFS): :func:`local_dispatch` is the
 one size decision and :func:`run_local_kernel` the one single-task
 hand-off. The threshold is deliberately conservative (default 8M edges ≈ 128 MB of int64 arrays — far below
 one executor's memory, and ~2 orders of magnitude under what a 4 GiB
@@ -96,9 +96,6 @@ def probe_edge_count(edges: DataFrame, threshold: int) -> int:
     return edges.limit(threshold + 1).count()
 
 
-EMPTY, LOCAL = "empty", "local-csr"
-
-
 def local_dispatch(
     edges: DataFrame,
     local_mode: bool | None,
@@ -123,9 +120,9 @@ def local_dispatch(
     auto = local_mode is None and auto and cap > 0
     n = probe_edge_count(edges, 0 if local_mode else max(cap if auto else 0, probe_to))
     if n == 0:
-        return EMPTY, 0
+        return "empty", 0
     if local_mode or (auto and n <= cap):
-        return LOCAL, n
+        return "local-csr", n
     return None, n
 
 
@@ -280,69 +277,6 @@ def cc_kernel(max_iter: int) -> Callable[[pd.DataFrame], pd.DataFrame]:
                 "changed": np.int64(changed),
             }
         )
-
-    return kernel
-
-
-def scc_kernel() -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """Local-CSR form of ``operators.scc.strongly_connected_components``:
-    the reference's own algorithm, Tarjan
-    (`/root/reference/src/algo/sccs/tarjan.rs:9-116`), iterative over the
-    CSR — one Python step per arc, like the DFS kernel, in place of the
-    distributed trim/color/sweep rounds and their ~100 Spark jobs on
-    even a tiny graph. Self-loops add no reachability; every vertex of
-    the edge table gets ``component`` = the min id of its SCC, the same
-    canonical labelling as the distributed path."""
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        verts, src_i, dst_i = _vertex_index(
-            pdf[SRC].to_numpy(np.int64), pdf[DST].to_numpy(np.int64)
-        )
-        nv = len(verts)
-        loop = src_i == dst_i
-        indptr, indices = _csr(src_i[~loop], dst_i[~loop], nv)
-        ptr, adj = indptr.tolist(), indices.tolist()
-        # w is on Tarjan's stack iff it was visited and has no component yet
-        index, low, comp = [-1] * nv, [0] * nv, [-1] * nv
-        stack: list[int] = []
-        seen = n_comp = 0
-        for root in range(nv):
-            if index[root] >= 0:
-                continue
-            index[root] = low[root] = seen
-            seen += 1
-            stack.append(root)
-            work = [(root, ptr[root])]
-            while work:
-                v, i = work[-1]
-                end = ptr[v + 1]
-                while i < end:
-                    w = adj[i]
-                    i += 1
-                    if index[w] < 0:  # descend; resume v at arc i later
-                        work[-1] = (v, i)
-                        index[w] = low[w] = seen
-                        seen += 1
-                        stack.append(w)
-                        work.append((w, ptr[w]))
-                        break
-                    if comp[w] < 0 and index[w] < low[v]:
-                        low[v] = index[w]
-                else:  # v's arcs are done
-                    work.pop()
-                    if work and low[v] < low[work[-1][0]]:
-                        low[work[-1][0]] = low[v]
-                    if low[v] == index[v]:  # v roots an SCC: pop it
-                        while True:
-                            w = stack.pop()
-                            comp[w] = n_comp
-                            if w == v:
-                                break
-                        n_comp += 1
-        comp_a = np.asarray(comp, dtype=np.int64)
-        first = np.full(n_comp, nv, dtype=np.int64)
-        np.minimum.at(first, comp_a, np.arange(nv, dtype=np.int64))
-        return pd.DataFrame({"vertex": verts, "component": verts[first[comp_a]]})
 
     return kernel
 
