@@ -70,34 +70,6 @@ def test_pagerank_matches_oracle(spark, name):
     assert abs(gv.sum() - 1.0) < 1e-9  # probability mass conserved
 
 
-def test_pagerank_blocked_matches_per_step(spark):
-    """The k=4 blocked loop must reproduce the per-step loop exactly:
-    same stop iteration (the first whose L1 residual met tol, even when
-    it falls mid-block) and same ranks."""
-    arcs = NINE
-    w = _w(arcs)
-    df = edge_df(spark, arcs, w)
-    s_blocked, s_step = {}, {}
-    blocked = {
-        r["vertex"]: r["rank"]
-        for r in pagerank(
-            df, tol=1e-7, max_iter=300, stats=s_blocked, block_size=4
-        ).collect()
-    }
-    step = {
-        r["vertex"]: r["rank"]
-        for r in pagerank(
-            df, tol=1e-7, max_iter=300, stats=s_step, block_size=1
-        ).collect()
-    }
-    assert s_blocked["iterations"] == s_step["iterations"]
-    # stop must be allowed to land mid-block or the selection rule is untested
-    assert s_blocked["iterations"] % 4 != 0
-    bv = np.array([blocked[k] for k in sorted(blocked)])
-    sv = np.array([step[k] for k in sorted(step)])
-    np.testing.assert_allclose(bv, sv, rtol=1e-12, atol=1e-15)
-
-
 @pytest.mark.parametrize("name", list(GRAPHS))
 def test_cc_matches_oracle(spark, name):
     arcs = GRAPHS[name]
@@ -278,8 +250,8 @@ def test_auto_bucketize_above_threshold(spark):
     (the blocked localCheckpoint loop OOMed a 157M-edge CC run — its
     state copies outlive the ContextCleaner's GC race) and stay
     value-identical. Forbidding the local kernel (``local_mode=False``)
-    or choosing a ``block_size`` must not keep a big graph off that tier
-    either; only an explicit ``local_mode=True`` wins."""
+    must not keep a big graph off that tier either; only an explicit
+    ``local_mode=True`` wins."""
     import pytest as _pytest
 
     from tests.conftest import NINE, edge_df
@@ -295,7 +267,7 @@ def test_auto_bucketize_above_threshold(spark):
         "lpa": (label_propagation, "label"),
         "pr": (pagerank, "rank"),
     }
-    variants = ({}, {"local_mode": False}, {"block_size": 4})
+    variants = ({}, {"local_mode": False})
     got = {}
     spark.conf.set("wga.bucketizeMinEdges", "1")
     try:
@@ -429,11 +401,11 @@ def test_pagerank_blocked_deep_iteration_stats_safe(spark):
     LogicalRDDs (see plans/superstep.materialize docstring): loops whose
     superstep self-joins state can compound the estimate until stats
     arithmetic overflows (~iteration 25 in HyperBall before its
-    StatsResetter fix). The blocked loop chains 4 self-referential steps
-    per materialize — pin that 160 supersteps (40 blocks) survive."""
+    StatsResetter fix). Each superstep of the blocked tier self-joins
+    the previous materialized state — pin that 160 supersteps survive."""
     df = edge_df(spark, CYCLE4, [1.0] * len(CYCLE4))
     s: dict = {}
-    out = pagerank(df, tol=0.0, max_iter=160, stats=s, block_size=4).collect()
+    out = pagerank(df, tol=0.0, max_iter=160, stats=s, local_mode=False).collect()
     assert s["iterations"] == 160
     assert abs(sum(r["rank"] for r in out) - 1.0) < 1e-9
 
@@ -552,47 +524,3 @@ def test_local_csr_auto_dispatch_threshold(spark):
     b = {r.vertex: r.rank for r in ranks_dist.collect()}
     for v in a:
         assert a[v] == pytest.approx(b[v], abs=1e-12)
-
-
-def test_cc_blocked_matches_per_step(spark):
-    """The k=4 blocked hash-min loop must reproduce the per-step loop
-    exactly: same fixpoint iteration (even mid-block) and same labels —
-    the delta frontier is carried through the chained columns."""
-    arcs = er_graph(60, 0.04, seed=5) + [(70, 71), (71, 72)]
-    df = edge_df(spark, arcs)
-    s_blocked, s_step = {}, {}
-    blocked = {
-        r["vertex"]: r["component"]
-        for r in connected_components(df, stats=s_blocked, block_size=4).collect()
-    }
-    step = {
-        r["vertex"]: r["component"]
-        for r in connected_components(df, stats=s_step, block_size=1).collect()
-    }
-    assert blocked == step
-    assert s_blocked["iterations"] == s_step["iterations"]
-
-
-def test_lpa_blocked_matches_per_step(spark):
-    """Blocked LPA ≡ per-step LPA: labels and iteration count, both at
-    fixpoint and at the oscillation cap (max_iter must cut the block
-    short at exactly the same superstep)."""
-    arcs = NINE
-    w = _w(arcs)
-    df = edge_df(spark, arcs, w)
-    for cap in (20, 3):  # fixpoint; then a cap that lands mid-block
-        s_blocked, s_step = {}, {}
-        blocked = {
-            r["vertex"]: r["label"]
-            for r in label_propagation(
-                df, max_iter=cap, stats=s_blocked, block_size=4
-            ).collect()
-        }
-        step = {
-            r["vertex"]: r["label"]
-            for r in label_propagation(
-                df, max_iter=cap, stats=s_step, block_size=1
-            ).collect()
-        }
-        assert blocked == step, f"cap={cap}"
-        assert s_blocked["iterations"] == s_step["iterations"], f"cap={cap}"

@@ -57,8 +57,8 @@ class _Components(Fixpoint):
             "vertex", F.col("vertex").alias("label"), F.lit(True).alias("changed")
         )
 
-    def step(self, cur, j, prev):
-        label, changed = F.col(f"label{j - 1}"), F.col(f"changed{j - 1}")
+    def step(self, cur, prev):
+        label, changed = F.col("label0"), F.col("changed0")
         msgs = (  # delta frontier: only last round's changed vertices scatter
             cur.filter(changed)
             .select(F.col("vertex").alias("__v"), label.alias("__l"))
@@ -69,12 +69,12 @@ class _Components(Fixpoint):
         nl = F.coalesce(F.col("__nl"), label)
         return cur.join(msgs, F.col("vertex") == F.col(DST), "left").select(
             *cur.columns,
-            F.least(label, nl).alias(f"label{j}"),
-            (nl < label).alias(f"changed{j}"),
+            F.least(label, nl).alias("label1"),
+            (nl < label).alias("changed1"),
         )
 
-    def aggregates(self, j):
-        return {"changed": F.sum(F.col(f"changed{j}").cast("long"))}
+    def aggregates(self):
+        return {"changed": F.sum(F.col("changed1").cast("long"))}
 
     def converged(self, metrics):
         return metrics["changed"] == 0
@@ -86,25 +86,21 @@ def connected_components(
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
     bucketize_edges: bool = False,
-    block_size: int | None = None,
     local_mode: bool | None = None,
     edge_store: str = "auto",
 ) -> DataFrame:
     """Returns ``(vertex:bigint, component:bigint)`` on the symmetrized graph.
 
-    Tiers, ``bucketize_edges``, ``block_size`` (hash-min supersteps
-    chained per Spark action; the delta frontier rides along as the
-    ``changed`` columns), ``local_mode``, ``checkpoint`` and ``stats``
-    are the fixpoint driver's (``plans/fixpoint.py``); the stop rule is
-    the first superstep with zero label changes. ``stats`` also records
+    Tiers, ``bucketize_edges``, ``local_mode``, ``checkpoint`` and
+    ``stats`` are the fixpoint driver's (``plans/fixpoint.py``; the
+    delta frontier rides along as the carried ``changed`` column); the
+    stop rule is the first superstep with zero label changes. ``stats`` also records
     ``bucketized`` (the persist-chain tier ran). ``edge_store`` selects
     the pinned edge store on the persist-chain tier (``pin_edges``).
     Exact: min-label exchange is ordering-insensitive integer math.
     """
     fp = _Components(edge_store)
-    out = fp.run(
-        edges, max_iter, checkpoint, stats, bucketize_edges, block_size, local_mode
-    )
+    out = fp.run(edges, max_iter, checkpoint, stats, bucketize_edges, local_mode)
     if stats is not None:
         stats["bucketized"] = fp.tier == "persist-chain"
     return out

@@ -47,9 +47,9 @@ class _LabelPropagation(Fixpoint):
             "vertex", F.col("vertex").alias("label")
         )
 
-    def step(self, cur, j, prev):
+    def step(self, cur, prev):
         # no delta frontier: the vote needs every neighbor's current label
-        label = F.col(f"label{j - 1}")
+        label = F.col("label0")
         tally = (
             cur.select(F.col("vertex").alias("__v"), label.alias("__l"))
             .join(self.edges, F.col("__v") == F.col(SRC))
@@ -63,11 +63,11 @@ class _LabelPropagation(Fixpoint):
         )
         nl = F.coalesce(F.col("__nl"), label)
         return cur.join(best, F.col("vertex") == F.col(DST), "left").select(
-            *cur.columns, nl.alias(f"label{j}"), (nl != label).alias(f"changed{j}")
+            *cur.columns, nl.alias("label1"), (nl != label).alias("changed1")
         )
 
-    def aggregates(self, j):
-        return {"changed": F.sum(F.col(f"changed{j}").cast("long"))}
+    def aggregates(self):
+        return {"changed": F.sum(F.col("changed1").cast("long"))}
 
     def converged(self, metrics):
         return metrics["changed"] == 0
@@ -79,14 +79,12 @@ def label_propagation(
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
     bucketize_edges: bool = False,
-    block_size: int | None = None,
     local_mode: bool | None = None,
     edge_store: str = "auto",
 ) -> DataFrame:
     """Returns ``(vertex:bigint, label:bigint)``.
 
-    Tiers, ``bucketize_edges``, ``block_size`` (majority-vote supersteps
-    chained per Spark action), ``local_mode``, ``checkpoint`` and
+    Tiers, ``bucketize_edges``, ``local_mode``, ``checkpoint`` and
     ``stats`` are the fixpoint driver's (``plans/fixpoint.py``); the
     stop rule is the first superstep with zero label changes, or
     ``max_iter``. ``edge_store`` selects the pinned edge store on the
@@ -94,5 +92,5 @@ def label_propagation(
     bit-exact vs the local kernel.
     """
     return _LabelPropagation(edge_store).run(
-        edges, max_iter, checkpoint, stats, bucketize_edges, block_size, local_mode
+        edges, max_iter, checkpoint, stats, bucketize_edges, local_mode
     )

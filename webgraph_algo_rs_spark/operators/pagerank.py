@@ -11,11 +11,11 @@ Convergence mirrors the reference's per-iteration modified-counter stop
 rule (``/root/reference/src/algo/hyperball/hyperball_impl.rs:552-570``):
 we track the L1 residual ``Σ|r_{t+1} − r_t|`` and stop at ``tol``.
 
-Tiers, superstep blocking, checkpoints and stats are the shared
-fixpoint driver's (``plans/fixpoint.py``). A step's dangling mass is the
-previous step's stop aggregate when an earlier action computed it, else
-a 1-row aggregate cross-joined into the step plan (Catalyst's exchange
-reuse shares its prefix with the message aggregation).
+Tiers, checkpoints and stats are the shared fixpoint driver's
+(``plans/fixpoint.py``). A step's dangling mass is the previous step's
+stop aggregate; the first superstep of a fresh run has none and
+cross-joins a 1-row aggregate into its plan (Catalyst's exchange reuse
+shares its prefix with the message aggregation).
 """
 
 from __future__ import annotations
@@ -82,8 +82,8 @@ class _PageRank(Fixpoint):
         self.edges = self.pin(norm_plan.coalesce(p), probe_df=edges)
         return base.coalesce(min(self.n_buckets, n // 20_000 + 1))
 
-    def step(self, cur, j, prev):
-        r = F.col(f"rank{j - 1}")
+    def step(self, cur, prev):
+        r = F.col("rank0")
         msgs = (
             cur.select(F.col("vertex").alias("__v"), r.alias("__r"))
             .join(self.edges, F.col("__v") == F.col(SRC))
@@ -103,13 +103,13 @@ class _PageRank(Fixpoint):
                 F.lit((1.0 - self.damping) / n)
                 + F.lit(self.damping)
                 * (F.coalesce(F.col("__c"), F.lit(0.0)) + dm / F.lit(n))
-            ).alias(f"rank{j}"),
+            ).alias("rank1"),
         )
 
-    def aggregates(self, j):
-        r = F.col(f"rank{j}")
+    def aggregates(self):
+        r = F.col("rank1")
         return {
-            "residual": F.sum(F.abs(r - F.col(f"rank{j - 1}"))),
+            "residual": F.sum(F.abs(r - F.col("rank0"))),
             "dangling_mass": _dangling_mass(r),
         }
 
@@ -125,7 +125,6 @@ def pagerank(
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
     bucketize_edges: bool = False,
-    block_size: int | None = None,
     local_mode: bool | None = None,
     edge_store: str = "auto",
 ) -> DataFrame:
@@ -136,8 +135,6 @@ def pagerank(
     ``stats``: optional dict populated with tier/iterations/residual/
     wall_sec and ``n_vertices``.
     ``bucketize_edges``: take the persist-chain big-graph tier.
-    ``block_size``: supersteps chained per Spark action (default 4;
-    1 with ``checkpoint`` or on the persist-chain tier).
     ``local_mode``: ``True`` forces the partition-local CSR kernel,
     ``False`` forbids it, ``None`` auto-picks it under
     ``wga.localKernelMaxEdges`` edges.
@@ -147,9 +144,7 @@ def pagerank(
     """
     fp = _PageRank(damping, tol, edge_store)
     edges = edges.select(SRC, DST, W)
-    out = fp.run(
-        edges, max_iter, checkpoint, stats, bucketize_edges, block_size, local_mode
-    )
+    out = fp.run(edges, max_iter, checkpoint, stats, bucketize_edges, local_mode)
     if stats is not None:
         stats["n_vertices"] = fp.n if fp.n is not None else out.count()
     return out

@@ -822,8 +822,9 @@ def _all_cc_upper_bound(
     members = pivots.join(
         comps.select("vertex", "component"), "component"
     ).select(F.col("pivot").alias("source"), "vertex")
-    pf = materialize(bfs_distances(arcs, seeds, vertex_filter=members))
-    pb = materialize(bfs_distances(transpose, seeds, vertex_filter=members))
+    # bfs_distances returns a materialized frame on both of its tiers
+    pf = bfs_distances(arcs, seeds, vertex_filter=members)
+    pb = bfs_distances(transpose, seeds, vertex_filter=members)
     p2c = pivots.select(F.col("pivot").alias("source"), "component")
     # per-component DP inputs: pivot eccentricity inside its SCC and the
     # pivot's current upper bounds (the DP's clamp)

@@ -13,11 +13,11 @@ a local kernel; this module adds the two superstep tiers:
 
 * ``empty`` — the edge table has no rows; nothing runs.
 * ``local-csr`` — at most ``min(wga.localKernelMaxEdges,
-  wga.bucketizeMinEdges)`` edges and no checkpoint, ``block_size`` or
+  wga.bucketizeMinEdges)`` edges and no checkpoint or
   ``bucketize_edges`` requested: the whole loop runs inside one
   Arrow-batched task. ``local_mode=True`` forces it.
-* ``blocked`` — supersteps as DataFrame joins, ``k`` chained per Spark
-  action (below).
+* ``blocked`` — supersteps as DataFrame joins, each staged by
+  ``materialize`` (an eager ``localCheckpoint``).
 * ``persist-chain`` — above ``wga.bucketizeMinEdges`` edges (or with
   ``bucketize_edges``): the edge side is pinned on ``src`` once
   (``pin_edges``) and states rotate through a :class:`PersistChain`, so
@@ -30,18 +30,14 @@ One capped ``probe_edge_count`` decides all four: it never scans more
 than ``wga.bucketizeMinEdges + 1`` rows (one row when ``local_mode=True``
 or ``bucketize_edges`` already fixes the tier).
 
-**Superstep blocking.** The state frame carries each carried column
-suffixed by step: ``rank0`` is the state entering the block, and the
-operator's step plan appends ``rank{j}`` from ``rank{j-1}``. ``k`` steps
-are chained into one lazy plan, cut between steps with
-``localCheckpoint(eager=False)`` (a step references its predecessor two
-or three times — gather, apply, PageRank's dangling-mass aggregate — so
-an un-cut chain grows exponentially), and one aggregate evaluates every
-chained step's stop metrics. The stop rule then *selects* the first step
-that met it, so values and stop iteration are bit-identical to a
-per-step loop with k× fewer global barriers. ``k=1`` is the per-step
-loop, which checkpointed runs (a durable snapshot per superstep) and the
-persist-chain tier use.
+**Supersteps.** Both superstep tiers run one superstep per Spark action:
+the state frame holds the key columns and each carried column suffixed
+``0``; the operator's step plan appends the same columns suffixed ``1``,
+the tier stages the frame, and one aggregate ``first()`` reads the
+step's stop metrics. The ``1`` columns then become the next step's
+``0`` columns. Steps are not chained behind lazy ``localCheckpoint``
+cuts: under AQE such a chain still runs several Spark jobs per step,
+and it measured no faster on R-MAT PageRank.
 
 **Checkpoints.** With a :class:`~webgraph_algo_rs_spark.checkpoint.CheckpointManager`
 every superstep commits the operator's state columns plus its metrics
@@ -84,13 +80,12 @@ def dispatch(
     edges: DataFrame,
     checkpoint: CheckpointManager | None,
     bucketize_edges: bool,
-    block_size: int | None,
     local_mode: bool | None,
 ) -> tuple[str, int]:
     """``(tier, probed edge count)`` for one call (module docstring); the
     count is exact on the ``blocked`` tier. ``local_dispatch`` makes the
-    ``empty`` / ``local-csr`` choice (auto only without a checkpoint, a
-    ``block_size`` or ``bucketize_edges``, and never above
+    ``empty`` / ``local-csr`` choice (auto only without a checkpoint or
+    ``bucketize_edges``, and never above
     ``wga.bucketizeMinEdges``); the same probe, scanned up to
     ``wga.bucketizeMinEdges``, picks ``blocked`` or ``persist-chain``."""
     if local_mode and (checkpoint is not None or bucketize_edges):
@@ -107,7 +102,7 @@ def dispatch(
         edges,
         local_mode,
         cap=min(local_kernel_threshold(spark), big_thr),
-        auto=checkpoint is None and block_size is None and not bucketize_edges,
+        auto=checkpoint is None and not bucketize_edges,
         probe_to=0 if bucketize_edges else big_thr,
     )
     if tier is not None:
@@ -124,12 +119,11 @@ class Fixpoint:
 
     * ``prepare(edges, n_edges)`` → the lazy initial state (``keys`` +
       ``carried`` columns); sets up the step's edge side with :meth:`pin`;
-    * ``step(cur, j, prev)`` → ``cur`` plus the step-``j`` columns
-      (each ``carried`` column suffixed ``j``) computed from the
-      step-``j-1`` ones. ``prev`` is step ``j-1``'s metrics when an
-      earlier action computed them (first step of a later block or of a
-      resumed run), else ``None``;
-    * ``aggregates(j)`` → ``{metric: aggregate Column}`` over step ``j``;
+    * ``step(cur, prev)`` → ``cur`` plus the next state (each
+      ``carried`` column suffixed ``1``) computed from the current one
+      (suffixed ``0``). ``prev`` is the previous superstep's metrics,
+      ``None`` only on the first superstep of a fresh run;
+    * ``aggregates()`` → ``{metric: aggregate Column}`` over the step;
     * ``converged(metrics)`` → the stop test on one step's metrics;
     * ``kernel(max_iter)`` → the local-CSR kernel.
     """
@@ -173,15 +167,12 @@ class Fixpoint:
         checkpoint: CheckpointManager | None = None,
         stats: dict | None = None,
         bucketize_edges: bool = False,
-        block_size: int | None = None,
         local_mode: bool | None = None,
     ) -> DataFrame:
         """``(vertex, output)`` at the fixpoint or after ``max_iter``
         supersteps (module docstring)."""
         spark = edges.sparkSession
-        self.tier, n_edges = dispatch(
-            edges, checkpoint, bucketize_edges, block_size, local_mode
-        )
+        self.tier, n_edges = dispatch(edges, checkpoint, bucketize_edges, local_mode)
         t0 = time.time()
         if self.tier == "empty":
             self._record(stats, 0, 0, 0.0)
@@ -211,44 +202,26 @@ class Fixpoint:
         if self.tier == "persist-chain":
             chain = PersistChain("vertex", self.n_buckets)
             state = chain.seed(state)
-        k = block_size or 4
-        if checkpoint is not None or chain is not None:
-            k = 1  # a durable snapshot / a persisted handle per superstep
         cur = self._select(state, "", 0)
         t_loop = time.time()
         it = start
         while it < max_iter and not (last is not None and self.converged(last)):
-            steps = min(k, max_iter - it)
-            t_block = time.time()
-            for j in range(1, steps + 1):
-                cur = self.step(cur, j, last if j == 1 else None)
-                if j < steps:
-                    # lazy lineage cut: the plan becomes an RDD scan now,
-                    # computed only inside the block's single action
-                    cur = cur.localCheckpoint(eager=False)
+            t_step = time.time()
+            cur = self.step(cur, last)
             if chain is None:
                 cur = materialize(cur)
             else:
                 cur = chain.stage(cur, it - start)
-            aggs = [self.aggregates(j) for j in range(1, steps + 1)]
-            named = [
-                x.alias(f"{m}{j}") for j, a in enumerate(aggs, 1) for m, x in a.items()
-            ]
-            row = cur.agg(*named).first()
+            row = cur.agg(*[x.alias(m) for m, x in self.aggregates().items()]).first()
             if chain is not None:
                 chain.advance(cur)
-            wall_ms = max(int((time.time() - t_block) * 1000), 0) // steps
-            for j in range(1, steps + 1):
-                last = {"algo": self.algo, "iteration": it}
-                last.update({m: row[f"{m}{j}"] for m in aggs[j - 1]})
-                last["wall_ms"] = wall_ms
-                history.append(last)
-                it += 1
-                if self.converged(last):
-                    break
-            cur = self._select(cur, j, 0)
-            if checkpoint is not None and checkpoint.should_save(it - 1):
-                checkpoint.save(self._select(cur, 0, ""), it - 1, last, history)
+            last = {"algo": self.algo, "iteration": it, **row.asDict()}
+            last["wall_ms"] = int((time.time() - t_step) * 1000)
+            history.append(last)
+            cur = self._select(cur, 1, 0)
+            if checkpoint is not None and checkpoint.should_save(it):
+                checkpoint.save(self._select(cur, 0, ""), it, last, history)
+            it += 1
 
         result = cur.select("vertex", F.col(f"{self.carried[0]}0").alias(self.output))
         if chain is not None:
