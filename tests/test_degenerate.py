@@ -195,7 +195,7 @@ LOCAL_OPS = {
     "dfs_forest": (dfs_forest, DFS, _rows(0, 3, 50), None),
     "hyperball": (
         lambda e, **kw: hyperball(e, log2m=6, max_iter=2, **kw), HB, _rows(0, 3, 50),
-        {True: "local-csr", False: "supersteps"},
+        {True: "local-csr", False: "blocked"},
     ),
 }
 
@@ -284,7 +284,7 @@ SWITCH_OPS = {
     "triangles": (_stats_tier(triangle_count_per_vertex), "distributed-join"),
     "bfs": (_bfs_tier, "supersteps"),
     "dfs": (_dfs_tier, "raises"),
-    "hyperball": (_stats_tier(hyperball, log2m=4, max_iter=1), "supersteps"),
+    "hyperball": (_stats_tier(hyperball, log2m=4, max_iter=1), "blocked"),
 }
 
 

@@ -7,8 +7,9 @@
   reachable/sum-of-distance/harmonic values must match the brute-force
   all-pairs BFS oracle tightly (reference golden-file analog,
   `tests/test_hyperball.rs:167-262`);
-* salted vs unsalted lockstep — identical outputs byte-for-byte (the
-  reference's parallel-vs-sequential lockstep,
+* lockstep across physical plans — the frontier-local switch, the
+  local-CSR kernel and the distributed tiers give identical outputs
+  (the reference's parallel-vs-sequential lockstep,
   `src/algo/hyperball/hyperball_impl.rs:1215-1307`).
 """
 
@@ -116,18 +117,6 @@ def test_neighbourhood_function_monotone_and_converged(spark):
     assert nf[-1] == pytest.approx(exact_total, rel=0.05)
 
 
-def test_hyperball_salted_lockstep(spark):
-    """Two-level salted merge must be bit-identical to unsalted (max is
-    associative/commutative; mirrors the reference's lockstep test)."""
-    arcs = er_graph(30, 0.15, seed=7)
-    edges = edge_df(spark, arcs)
-    plain = {r.vertex: r for r in hyperball(edges, log2m=6).collect()}
-    salted = {r.vertex: r for r in hyperball(edges, log2m=6, n_salt=4).collect()}
-    assert set(plain) == set(salted)
-    for v in plain:
-        assert plain[v] == salted[v]
-
-
 def test_hyperball_relative_threshold_stops_early(spark):
     arcs = er_graph(40, 0.08, seed=11)
     edges = edge_df(spark, arcs)
@@ -180,46 +169,48 @@ def test_jenkins_hash_and_weighted_init(spark):
     assert abs(got[1] / 1 - 1) < 0.35
 
 
-def test_hyperball_local_mode_lockstep(spark):
+def test_hyperball_local_mode_lockstep(spark, monkeypatch):
     """Local mode (collapsed-frontier broadcast, the reference's
     pre-local/local switch hyperball_impl.rs:795-835) must be a pure
     physical-plan change: forcing it from superstep 1
-    (local_frontier_frac=1.0) yields bit-identical centralities to the
+    (LOCAL_FRONTIER_FRAC=1.0) yields bit-identical centralities to the
     shuffled path (frac=0), and the stats record the local supersteps."""
+    import importlib
+
     from tests.conftest import edge_df, er_graph
     from webgraph_algo_rs_spark.operators import hyperball
+
+    # the package's `hyperball` function shadows the module attribute
+    hb_module = importlib.import_module("webgraph_algo_rs_spark.operators.hyperball")
 
     arcs = er_graph(40, 0.08, seed=3)
     df = edge_df(spark, arcs)
     s_local, s_off = {}, {}
+    monkeypatch.setattr(hb_module, "LOCAL_FRONTIER_FRAC", 1.0)
     local = {
         r["vertex"]: (r["reachable"], r["sum_distances"], r["harmonic"])
-        for r in hyperball(
-            df, log2m=6, stats=s_local, local_frontier_frac=1.0, local_mode=False
-        ).collect()
+        for r in hyperball(df, log2m=6, stats=s_local, local_mode=False).collect()
     }
+    monkeypatch.setattr(hb_module, "LOCAL_FRONTIER_FRAC", 0.0)
     off = {
         r["vertex"]: (r["reachable"], r["sum_distances"], r["harmonic"])
-        for r in hyperball(
-            df, log2m=6, stats=s_off, local_frontier_frac=0.0, local_mode=False
-        ).collect()
+        for r in hyperball(df, log2m=6, stats=s_off, local_mode=False).collect()
     }
     assert local == off
     assert s_local["local_supersteps"] == s_local["iterations"]
     assert s_off["local_supersteps"] == 0
 
     # the absolute cap overrides the relative gate: even with every
-    # superstep's frontier under frac=1.0, local_frontier_max=0 must
+    # superstep's frontier under frac=1.0, LOCAL_FRONTIER_MAX=0 must
     # keep the loop on the shuffled path (the 1e8-vertex guard — n/32
     # rows of m-byte sketches is not broadcastable) with identical
     # output
     s_cap: dict = {}
+    monkeypatch.setattr(hb_module, "LOCAL_FRONTIER_FRAC", 1.0)
+    monkeypatch.setattr(hb_module, "LOCAL_FRONTIER_MAX", 0)
     capped = {
         r["vertex"]: (r["reachable"], r["sum_distances"], r["harmonic"])
-        for r in hyperball(
-            df, log2m=6, stats=s_cap, local_frontier_frac=1.0,
-            local_frontier_max=0, local_mode=False,
-        ).collect()
+        for r in hyperball(df, log2m=6, stats=s_cap, local_mode=False).collect()
     }
     assert capped == off
     assert s_cap["local_supersteps"] == 0
@@ -239,11 +230,14 @@ def test_hyperball_local_matches_distributed(spark):
     w = df.sparkSession.createDataFrame(
         [(v, 1 + (v % 4)) for v in range(60)], "vertex bigint, weight int"
     )
-    for kwargs in (
-        {},
-        {"node_weights": w},
-        {"discount": lambda t: 1.0 / (t * t)},
-        {"rel_threshold": 0.2},
+    # the {} case also runs the persist-chain tier: bucketizeMinEdges=1
+    # sends the distributed call there
+    for kwargs, conf in (
+        ({}, {}),
+        ({}, {"wga.bucketizeMinEdges": "1"}),
+        ({"node_weights": w}, {}),
+        ({"discount": lambda t: 1.0 / (t * t)}, {}),
+        ({"rel_threshold": 0.2}, {}),
     ):
         s_loc, s_dist = {}, {}
         loc = {
@@ -252,12 +246,19 @@ def test_hyperball_local_matches_distributed(spark):
                 df, log2m=6, stats=s_loc, local_mode=True, **kwargs
             ).collect()
         }
-        dist = {
-            r["vertex"]: tuple(r)
-            for r in hyperball(
-                df, log2m=6, stats=s_dist, local_mode=False, **kwargs
-            ).collect()
-        }
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        try:
+            dist = {
+                r["vertex"]: tuple(r)
+                for r in hyperball(
+                    df, log2m=6, stats=s_dist, local_mode=False, **kwargs
+                ).collect()
+            }
+        finally:
+            for k in conf:
+                spark.conf.unset(k)
+        assert s_dist["tier"] == ("persist-chain" if conf else "blocked"), kwargs
         assert loc == dist, kwargs
         assert s_loc["iterations"] == s_dist["iterations"], kwargs
         nf_l = s_loc["neighbourhood_function"]
@@ -265,3 +266,37 @@ def test_hyperball_local_matches_distributed(spark):
         assert len(nf_l) == len(nf_d)
         for x, y in zip(nf_l, nf_d):
             assert x == pytest.approx(y, rel=1e-12)
+
+
+def test_hyperball_long_distributed_run_leaves_no_spill(spark, monkeypatch):
+    """A distributed run of 24+ supersteps crosses the fixpoint driver's
+    stats firewall (a parquet spill every 8 supersteps) three times:
+    without it the size estimate of the self-joining state grows past
+    any BigInteger and the driver stalls. The values must match the
+    local kernel, and the run must delete its spill directories."""
+    import os
+
+    from tests.conftest import edge_df
+    from webgraph_algo_rs_spark.operators import hyperball
+    from webgraph_algo_rs_spark.plans.superstep import StatsResetter
+
+    spills = []
+    reset = StatsResetter.reset
+
+    def spy(self, df):
+        out = reset(self, df)
+        spills.append(self._dir)
+        return out
+
+    monkeypatch.setattr(StatsResetter, "reset", spy)
+    df = edge_df(spark, [(i, (i + 1) % 24) for i in range(24)])
+    s_loc, s_dist = {}, {}
+    loc, dist = (
+        sorted(tuple(r) for r in hyperball(df, log2m=4, stats=s, local_mode=m).collect())
+        for s, m in ((s_loc, True), (s_dist, False))
+    )
+    assert s_dist["tier"] == "blocked"
+    assert s_dist["iterations"] == s_loc["iterations"] >= 24
+    assert dist == loc
+    assert len(spills) == s_dist["iterations"] // 8
+    assert not any(os.path.exists(d) for d in spills)

@@ -225,6 +225,18 @@ class HllParams:
         self.add(regs, elements)
         return regs
 
+    def weighted(self, vertices: np.ndarray, weights: np.ndarray) -> np.ndarray:
+        """Counter i initialized with ``weights[i]`` distinct elements —
+        HyperBall's weighted init (`hyperball_impl.rs:41-42,1150-1159`).
+        The reference draws them at random; element k of vertex v is
+        ``(v << 24) + k`` here (vertex ids < 2^39, weights < 2^24)."""
+        regs = self.empty(len(vertices))
+        rows = np.repeat(np.arange(len(vertices)), weights)
+        csum = np.concatenate(([0], np.cumsum(weights)[:-1]))
+        k = np.arange(rows.size, dtype=np.int64) - np.repeat(csum, weights)
+        self.add_multi(regs, rows, np.repeat(vertices, weights) * np.int64(1 << 24) + k)
+        return regs
+
     @staticmethod
     def to_bytes(regs: np.ndarray) -> list[bytes]:
         """(n, m) uint8 → list of m-byte payloads for a binary column."""

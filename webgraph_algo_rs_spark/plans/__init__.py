@@ -3,5 +3,4 @@ from webgraph_algo_rs_spark.plans.superstep import (  # noqa: F401
     symmetrize,
     undirected_canonical,
     graph_vertices,
-    salted_agg,
 )

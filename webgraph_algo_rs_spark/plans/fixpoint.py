@@ -1,21 +1,24 @@
 """One fixpoint driver for the iterative vertex-state operators
-(PageRank, connected components, label propagation).
+(PageRank, connected components, label propagation, HyperBall).
 
 North rule: the iterative operators run as checkpointed, resumable
 supersteps over one edge table. Each operator subclasses
 :class:`Fixpoint` and supplies only its edge prep, initial state, step
 plan, stop aggregates/test and local-CSR kernel; this module owns the rest.
 
-**Size dispatch** (:func:`dispatch`) picks one physical tier per call,
+**Size dispatch** (:meth:`Fixpoint.dispatch`) picks one physical tier per call,
 recorded as ``stats["tier"]``. The ``empty`` / ``local-csr`` choice is
 ``plans/local_csr.local_dispatch``, shared with every operator that has
 a local kernel; this module adds the two superstep tiers:
 
 * ``empty`` — the edge table has no rows; nothing runs.
-* ``local-csr`` — at most ``min(wga.localKernelMaxEdges,
+* ``local-csr`` — at most ``min(local edge cap,
   wga.bucketizeMinEdges)`` edges and no checkpoint or
   ``bucketize_edges`` requested: the whole loop runs inside one
-  Arrow-batched task. ``local_mode=True`` forces it.
+  Arrow-batched task. ``local_mode=True`` forces it. The local edge cap
+  is ``wga.localKernelMaxEdges``; an operator whose superstep moves more
+  than one row's worth of bytes per edge scales it down
+  (:meth:`Fixpoint.local_cap`).
 * ``blocked`` — supersteps as DataFrame joins, each staged by
   ``materialize`` (an eager ``localCheckpoint``).
 * ``persist-chain`` — above ``wga.bucketizeMinEdges`` edges (or with
@@ -38,6 +41,19 @@ step's stop metrics. The ``1`` columns then become the next step's
 ``0`` columns. Steps are not chained behind lazy ``localCheckpoint``
 cuts: under AQE such a chain still runs several Spark jobs per step,
 and it measured no faster on R-MAT PageRank.
+
+**Stats firewall.** ``localCheckpoint`` copies the child plan's
+estimated ``sizeInBytes`` into the checkpoint (see
+``superstep.materialize``). A step that joins the state with a frame
+derived from the state (HyperBall: state ⋈ messages built from its own
+frontier) then about squares the estimate every superstep, until stats
+arithmetic stalls the driver. An operator with such a step sets
+``stats_reset_every``: every that many supersteps the step plan is
+written to parquet and read back (:class:`StatsResetter`) before it is
+staged, so the staged frame's stats are real file sizes. Every staged
+frame is a copy taken after the reset, so the result never reads the
+spill, which is deleted when the run ends. The other operators leave it
+at 0 (off).
 
 **Checkpoints.** With a :class:`~webgraph_algo_rs_spark.checkpoint.CheckpointManager`
 every superstep commits the operator's state columns plus its metrics
@@ -71,45 +87,10 @@ from webgraph_algo_rs_spark.plans.superstep import (
     SRC,
     W,
     PersistChain,
+    StatsResetter,
     materialize,
     pin_edges,
 )
-
-
-def dispatch(
-    edges: DataFrame,
-    checkpoint: CheckpointManager | None,
-    bucketize_edges: bool,
-    local_mode: bool | None,
-) -> tuple[str, int]:
-    """``(tier, probed edge count)`` for one call (module docstring); the
-    count is exact on the ``blocked`` tier. ``local_dispatch`` makes the
-    ``empty`` / ``local-csr`` choice (auto only without a checkpoint or
-    ``bucketize_edges``, and never above
-    ``wga.bucketizeMinEdges``); the same probe, scanned up to
-    ``wga.bucketizeMinEdges``, picks ``blocked`` or ``persist-chain``."""
-    if local_mode and (checkpoint is not None or bucketize_edges):
-        # an explicit force must not be silently overridden: the local
-        # kernel runs the whole loop inside one task, so per-superstep
-        # durable checkpoints / pinned edge buckets cannot apply to it
-        raise ValueError(
-            "local_mode=True cannot be combined with "
-            + ("checkpoint" if checkpoint is not None else "bucketize_edges")
-        )
-    spark = edges.sparkSession
-    big_thr = bucketize_min_edges(spark)
-    tier, n_edges = local_dispatch(
-        edges,
-        local_mode,
-        cap=min(local_kernel_threshold(spark), big_thr),
-        auto=checkpoint is None and not bucketize_edges,
-        probe_to=0 if bucketize_edges else big_thr,
-    )
-    if tier is not None:
-        return tier, n_edges
-    if bucketize_edges or n_edges > big_thr:
-        return "persist-chain", n_edges
-    return "blocked", n_edges
 
 
 class Fixpoint:
@@ -119,13 +100,19 @@ class Fixpoint:
 
     * ``prepare(edges, n_edges)`` → the lazy initial state (``keys`` +
       ``carried`` columns); sets up the step's edge side with :meth:`pin`;
-    * ``step(cur, prev)`` → ``cur`` plus the next state (each
-      ``carried`` column suffixed ``1``) computed from the current one
-      (suffixed ``0``). ``prev`` is the previous superstep's metrics,
+    * ``step(cur, prev)`` → the next state: ``keys`` plus each
+      ``carried`` column suffixed ``1``, computed from the current one
+      (suffixed ``0``; ``cur`` may keep further columns for the
+      aggregates). ``prev`` is the previous superstep's metrics,
       ``None`` only on the first superstep of a fresh run;
     * ``aggregates()`` → ``{metric: aggregate Column}`` over the step;
     * ``converged(metrics)`` → the stop test on one step's metrics;
-    * ``kernel(max_iter)`` → the local-CSR kernel.
+    * ``kernel(max_iter)`` → the local-CSR kernel, which returns the
+      result schema plus ``iterations`` and the stop metric (non-null
+      on at least one row).
+
+    and may override :meth:`local_cap`, :meth:`kernel_input` and
+    :meth:`result`.
     """
 
     algo = ""  # history / snapshot tag
@@ -137,12 +124,61 @@ class Fixpoint:
     metric_type = "bigint"
     unset: float = -1  # the stop metric before any superstep ran
     with_weight = True  # the local kernel reads the weight column
+    stats_reset_every = 0  # stats firewall cadence in supersteps; 0 = off
 
     def __init__(self, edge_store: str = "auto"):
         self.edge_store = edge_store
         self.tier = ""
         self.n_buckets = 0
         self._release = None
+
+    def local_cap(self, spark) -> int:
+        """The auto local-CSR edge cap: ``wga.localKernelMaxEdges``."""
+        return local_kernel_threshold(spark)
+
+    def kernel_input(self, edges: DataFrame) -> DataFrame:
+        """The frame the local kernel reads."""
+        return edges.select(SRC, DST, *([W] if self.with_weight else []))
+
+    def result(self, state: DataFrame) -> DataFrame:
+        """The result frame from the final state (bare column names)."""
+        return state.select("vertex", F.col(self.carried[0]).alias(self.output))
+
+    def dispatch(
+        self,
+        edges: DataFrame,
+        checkpoint: CheckpointManager | None,
+        bucketize_edges: bool,
+        local_mode: bool | None,
+    ) -> tuple[str, int]:
+        """``(tier, probed edge count)`` for one call (module docstring);
+        the count is exact on the ``blocked`` tier. ``local_dispatch``
+        makes the ``empty`` / ``local-csr`` choice (auto only without a
+        checkpoint or ``bucketize_edges``, and never above
+        ``wga.bucketizeMinEdges``); the same probe, scanned up to
+        ``wga.bucketizeMinEdges``, picks ``blocked`` or ``persist-chain``."""
+        if local_mode and (checkpoint is not None or bucketize_edges):
+            # an explicit force must not be silently overridden: the local
+            # kernel runs the whole loop inside one task, so per-superstep
+            # durable checkpoints / pinned edge buckets cannot apply to it
+            raise ValueError(
+                "local_mode=True cannot be combined with "
+                + ("checkpoint" if checkpoint is not None else "bucketize_edges")
+            )
+        spark = edges.sparkSession
+        big_thr = bucketize_min_edges(spark)
+        tier, n_edges = local_dispatch(
+            edges,
+            local_mode,
+            cap=min(self.local_cap(spark), big_thr),
+            auto=checkpoint is None and not bucketize_edges,
+            probe_to=0 if bucketize_edges else big_thr,
+        )
+        if tier is not None:
+            return tier, n_edges
+        if bucketize_edges or n_edges > big_thr:
+            return "persist-chain", n_edges
+        return "blocked", n_edges
 
     def pin(self, plan: DataFrame, probe_df: DataFrame) -> DataFrame:
         """The step's constant edge side: pinned on ``src`` on the
@@ -169,24 +205,24 @@ class Fixpoint:
         bucketize_edges: bool = False,
         local_mode: bool | None = None,
     ) -> DataFrame:
-        """``(vertex, output)`` at the fixpoint or after ``max_iter``
+        """The result frame at the fixpoint or after ``max_iter``
         supersteps (module docstring)."""
         spark = edges.sparkSession
-        self.tier, n_edges = dispatch(edges, checkpoint, bucketize_edges, local_mode)
+        self.tier, n_edges = self.dispatch(edges, checkpoint, bucketize_edges, local_mode)
         t0 = time.time()
         if self.tier == "empty":
             self._record(stats, 0, 0, 0.0)
             return spark.createDataFrame([], self.schema)
         if self.tier == "local-csr":
             out = run_local_kernel(
-                edges.select(SRC, DST, *([W] if self.with_weight else [])),
+                self.kernel_input(edges),
                 f"{self.schema}, iterations int, {self.metric} {self.metric_type}",
                 self.kernel(max_iter),
             )
             if stats is not None:
-                head = out.select("iterations", self.metric).first()
-                self._record(stats, head[0], head[1], time.time() - t0)
-            return out.select("vertex", self.output)
+                head = out.filter(F.col(self.metric).isNotNull()).first()
+                self._record(stats, head["iterations"], head[self.metric], time.time() - t0)
+            return out.drop("iterations", self.metric)
 
         self.n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
         initial = self.prepare(edges, n_edges)
@@ -203,31 +239,37 @@ class Fixpoint:
             chain = PersistChain("vertex", self.n_buckets)
             state = chain.seed(state)
         cur = self._select(state, "", 0)
+        spill = StatsResetter(self.algo)
         t_loop = time.time()
         it = start
-        while it < max_iter and not (last is not None and self.converged(last)):
-            t_step = time.time()
-            cur = self.step(cur, last)
-            if chain is None:
-                cur = materialize(cur)
-            else:
-                cur = chain.stage(cur, it - start)
-            row = cur.agg(*[x.alias(m) for m, x in self.aggregates().items()]).first()
-            if chain is not None:
-                chain.advance(cur)
-            last = {"algo": self.algo, "iteration": it, **row.asDict()}
-            last["wall_ms"] = int((time.time() - t_step) * 1000)
-            history.append(last)
-            cur = self._select(cur, 1, 0)
-            if checkpoint is not None and checkpoint.should_save(it):
-                checkpoint.save(self._select(cur, 0, ""), it, last, history)
-            it += 1
+        try:
+            while it < max_iter and not (last is not None and self.converged(last)):
+                t_step = time.time()
+                cur = self.step(cur, last)
+                if self.stats_reset_every and (it + 1) % self.stats_reset_every == 0:
+                    cur = spill.reset(cur)
+                if chain is None:
+                    cur = materialize(cur)
+                else:
+                    cur = chain.stage(cur, it - start)
+                row = cur.agg(*[x.alias(m) for m, x in self.aggregates().items()]).first()
+                if chain is not None:
+                    chain.advance(cur)
+                last = {"algo": self.algo, "iteration": it, **row.asDict()}
+                last["wall_ms"] = int((time.time() - t_step) * 1000)
+                history.append(last)
+                cur = self._select(cur, 1, 0)
+                if checkpoint is not None and checkpoint.should_save(it):
+                    checkpoint.save(self._select(cur, 0, ""), it, last, history)
+                it += 1
 
-        result = cur.select("vertex", F.col(f"{self.carried[0]}0").alias(self.output))
-        if chain is not None:
-            # pins the result off the chain and off the pinned edge
-            # table, which a later run may overwrite
-            result = chain.finish(result)
+            result = self.result(self._select(cur, 0, ""))
+            if chain is not None:
+                # pins the result off the chain and off the pinned edge
+                # table, which a later run may overwrite
+                result = chain.finish(result)
+        finally:
+            spill.close()
         if self._release is not None:
             self._release()
         self._record(

@@ -461,8 +461,9 @@ def hyperball_kernel(
     Input: the :func:`tagged` frame — role 0 an edge, role 1 a node
     weight ``(a=vertex, b=weight)``; ``weighted`` says a weight frame was
     given (missing vertices weigh 1). Returns the centrality frame plus
-    bookkeeping columns ``iterations`` (every row) and ``nf`` (non-null
-    on one row only — the monotone-clamped neighbourhood function).
+    bookkeeping columns ``iterations`` (every row) and
+    ``neighbourhood_function`` (non-null on one row only — the
+    monotone-clamped neighbourhood function).
     """
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -486,15 +487,7 @@ def hyperball_kernel(
             wv = np.searchsorted(verts, a[role == 1])
             inb = (wv < nv) & (verts[np.minimum(wv, nv - 1)] == a[role == 1])
             wmap[wv[inb]] = np.maximum(b[role == 1][inb], 0)
-            regs = params.empty(nv)
-            rows = np.repeat(np.arange(nv), wmap)
-            # weight_i distinct synthetic elements per node:
-            # (vertex << 24) + k — identical to the distributed
-            # init_weighted (operators/hyperball.py)
-            base = np.repeat(verts, wmap) * np.int64(1 << 24)
-            csum = np.concatenate(([0], np.cumsum(wmap)[:-1]))
-            k = np.arange(rows.size, dtype=np.int64) - np.repeat(csum, wmap)
-            params.add_multi(regs, rows, base + k)
+            regs = params.weighted(verts, wmap)
         else:
             regs = params.singletons(verts)
         est = params.estimate(regs)
@@ -571,7 +564,7 @@ def hyperball_kernel(
         pdf_out["iterations"] = np.int32(it)
         nf_col = [None] * nv
         nf_col[0] = nf
-        pdf_out["nf"] = nf_col
+        pdf_out["neighbourhood_function"] = nf_col
         return pdf_out
 
     return kernel

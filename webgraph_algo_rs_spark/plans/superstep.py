@@ -10,10 +10,11 @@ delta-iteration (``:784-799``). Our Spark analogs, in order:
   ``materialize()`` (eager localCheckpoint) cutting the lineage so the
   plan does not grow per iteration (hard part №1 in SURVEY.md §7);
 * **arc-balanced splitting** → hash shuffle on ``dst`` with Catalyst's
-  partial (map-side) aggregation as the combiner, AQE skew-join for hot
-  build sides, plus explicit two-level salting (``salted_agg``) for
-  merges that have *no* native partial aggregate (sketch unions in
-  pandas UDFs);
+  partial (map-side) aggregation as the combiner and AQE skew-join for
+  hot build sides. Merges with *no* native partial aggregate (HyperBall's
+  sketch unions in pandas UDFs) fold each Arrow batch map-side instead.
+  Two-level salting of their hot keys measured no faster on a 73k-arc
+  R-MAT graph, so there is no salting layer;
 * **systolic / delta iteration** → algorithms keep a ``changed`` flag
   and scatter only from the delta frontier.
 
@@ -24,6 +25,8 @@ from __future__ import annotations
 
 import itertools
 import os
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame
@@ -59,39 +62,39 @@ def materialize(df: DataFrame) -> DataFrame:
 
 
 class StatsResetter:
-    """Periodic parquet spill for long self-join loops.
+    """Parquet spill that resets the stats of a long self-join loop.
 
     ``reset(df)`` writes ``df`` to a scratch parquet dir and reads it
     back: the parquet scan is a fresh lineage root whose Catalyst stats
     come from real file sizes, killing the originStats growth described
-    in :func:`materialize`. Generations older than the previous one are
-    deleted eagerly (safe once a later eager materialization exists);
-    the final two generations are removed by ``close()`` or process
-    exit. On a production cluster this is the durable checkpoint commit
-    (Iceberg snapshot); locally it doubles as the stats firewall.
+    in :func:`materialize`. The dir is made on the first reset;
+    generations older than the previous one are deleted eagerly (safe
+    once a later eager materialization exists), the rest by ``close()``.
+    The fixpoint driver (``plans/fixpoint.py``) owns the one instance of
+    a run and closes it when the run ends. On a production cluster this
+    is the durable checkpoint commit (Iceberg snapshot); locally it
+    doubles as the stats firewall.
     """
 
-    def __init__(self, spark, label: str = "loop"):
-        import atexit
-        import shutil
-        import tempfile
-
-        self._dir = tempfile.mkdtemp(prefix=f"wga_spill_{label}_")
+    def __init__(self, label: str = "loop"):
+        self.label = label
+        self._dir = None
         self._gen = 0
-        self._shutil = shutil
-        atexit.register(shutil.rmtree, self._dir, ignore_errors=True)
 
     def reset(self, df: DataFrame) -> DataFrame:
+        if self._dir is None:
+            self._dir = tempfile.mkdtemp(prefix=f"wga_spill_{self.label}_")
         self._gen += 1
         path = os.path.join(self._dir, f"gen_{self._gen}")
         df.write.mode("overwrite").parquet(path)
         out = df.sparkSession.read.parquet(path)
-        old = os.path.join(self._dir, f"gen_{self._gen - 2}")
-        self._shutil.rmtree(old, ignore_errors=True)
+        shutil.rmtree(os.path.join(self._dir, f"gen_{self._gen - 2}"), ignore_errors=True)
         return out
 
     def close(self) -> None:
-        self._shutil.rmtree(self._dir, ignore_errors=True)
+        if self._dir is not None:
+            shutil.rmtree(self._dir, ignore_errors=True)
+            self._dir = None
 
 
 class UnionAccumulator:
@@ -188,7 +191,6 @@ def _sweep_stale_buckets(spark, base: str) -> None:
     if not loc:
         return
     import re
-    import shutil
 
     pat = re.compile(re.escape(base) + r"_(\d+)_\d+$")
     try:
@@ -245,8 +247,6 @@ def bucketize(
     # write fails with LOCATION_ALREADY_EXISTS
     loc = _warehouse_path(spark)
     if loc:
-        import shutil
-
         shutil.rmtree(f"{loc.rstrip('/')}/{table_name}", ignore_errors=True)
     df.write.bucketBy(n_buckets, key).sortBy(key).mode("overwrite").saveAsTable(
         table_name
@@ -255,8 +255,6 @@ def bucketize(
     def drop() -> None:
         spark.sql(f"DROP TABLE IF EXISTS {table_name}")
         if loc:
-            import shutil
-
             shutil.rmtree(f"{loc.rstrip('/')}/{table_name}", ignore_errors=True)
 
     return spark.table(table_name), drop
@@ -319,40 +317,6 @@ def pin_edges(
     pinned = df.repartition(n_buckets, key).persist(StorageLevel.MEMORY_AND_DISK)
     pinned.count()
     return pinned, lambda: pinned.unpersist()
-
-
-def salted_agg(
-    msgs: DataFrame,
-    key_col: str,
-    merge: Callable[[DataFrame, list[str]], DataFrame],
-    n_salt: int = 16,
-    salt_on: str | None = None,
-) -> DataFrame:
-    """Two-level salted aggregation for non-combinable merges.
-
-    ``sum``/``min``/``max`` messages don't need this — Catalyst plans
-    partial→final HashAggregate, so each shuffle key receives at most one
-    pre-combined row per map partition. But a pandas-UDF merge
-    (HLL register max over binary sketches) has no partial aggregate:
-    a hot ``dst`` (ubiquitous tool vertex) would funnel its entire
-    message fan-in through one reducer. We split each key into
-    ``n_salt`` sub-keys, merge per ``(key, salt)``, then merge the
-    ≤ ``n_salt`` partials per key — the reference's arc-balanced cursor
-    (``hyperball_impl.rs:991-1006``) re-expressed as shuffle topology.
-
-    The salt defaults to a hash over **all message columns**, which is
-    deterministic under task retry / stage recompute (a requirement for
-    any associative-but-non-idempotent merge; ``monotonically_increasing_id``
-    would re-deal rows to different salts on recompute). Pass ``salt_on``
-    to salt on a specific origin column instead.
-
-    ``merge(df, group_cols) -> DataFrame`` must aggregate ``df`` to one
-    row per group and be associative.
-    """
-    salt_cols = [F.col(salt_on)] if salt_on else [F.col(c) for c in msgs.columns]
-    salted = msgs.withColumn("_salt", F.pmod(F.hash(*salt_cols), F.lit(n_salt)))
-    partial = merge(salted, [key_col, "_salt"])
-    return merge(partial, [key_col]).drop("_salt")
 
 
 class PersistChain:
