@@ -386,8 +386,10 @@ def hyperball(
     fp = _HyperBall(params, rel_threshold, discount, node_weights)
     out = fp.run(edges, max_iter, stats=stats, local_mode=local_mode)
     if stats is not None:
-        if fp.tier == "empty":
-            stats["neighbourhood_function"] = [0.0]
+        if stats["iterations"] == 0 and fp.tier != "local-csr":
+            # no superstep read N(0): the sum of the initial estimates
+            n0 = out.agg(F.sum("reachable")).first()[0]
+            stats["neighbourhood_function"] = [float(n0 or 0.0)]
         stats["local_supersteps"] = (
             stats["iterations"] if fp.tier == "local-csr" else fp.local_steps
         )
