@@ -2,6 +2,8 @@
 (FIXTURES.md §3) and seeded ER graphs (cross-check strategy,
 /root/reference/tests/test_sccs.rs:222-266)."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -202,46 +204,20 @@ def test_degrees(spark):
     assert got[3]["out_degree"] == 0 and got[3]["in_degree"] == 1
 
 
-def test_bucketized_variants_match(spark, tmp_path):
-    """bucketize_edges=True must be value-identical for CC / LPA / PageRank
-    (the bucketed table only changes physical layout)."""
-    import pytest as _pytest
+@pytest.mark.parametrize("key", ["wga.localKernelMaxEdges", "wga.bucketizeMinEdges"])
+def test_malformed_size_conf_raises(spark, key):
+    """A size-dispatch conf that is not an integer literal raises a
+    ``ValueError`` naming the key and the value; it never silently
+    falls back to the default (``1e6`` used to mean 32M edges)."""
+    from tests.conftest import DIAMOND, edge_df
+    from webgraph_algo_rs_spark.operators import pagerank
 
-    from tests.conftest import NINE, edge_df
-    from webgraph_algo_rs_spark.operators import (
-        connected_components,
-        label_propagation,
-        pagerank,
-    )
-
-    edges = edge_df(spark, NINE)
-    for fn, key in (
-        (connected_components, "component"),
-        (label_propagation, "label"),
-    ):
-        a = {r.vertex: r[key] for r in fn(edges).collect()}
-        for store in ("cached", "table"):
-            b = {
-                r.vertex: r[key]
-                for r in fn(
-                    edges, bucketize_edges=True, edge_store=store
-                ).collect()
-            }
-            assert a == b, (fn.__name__, store)
-    pa = {r.vertex: r.rank for r in pagerank(edges).collect()}
-    # both physical edge stores of the big-graph path (pin_edges): the
-    # block-manager cache (what "auto" picks at benchmark scale) and
-    # the bucketed+sorted table (the 10^12-edge scale path)
-    for store in ("cached", "table"):
-        pb = {
-            r.vertex: r.rank
-            for r in pagerank(
-                edges, bucketize_edges=True, edge_store=store
-            ).collect()
-        }
-        assert set(pa) == set(pb), store
-        for v in pa:
-            assert pa[v] == _pytest.approx(pb[v], abs=1e-12), store
+    spark.conf.set(key, "1e6")
+    try:
+        with pytest.raises(ValueError, match=re.escape(key) + ".*'1e6'"):
+            pagerank(edge_df(spark, DIAMOND))
+    finally:
+        spark.conf.unset(key)
 
 
 def test_auto_bucketize_above_threshold(spark):

@@ -8,6 +8,9 @@ and one 50-vertex cycle.
   the empty graph, eccentricity 0 everywhere on self-loops, the cycle's
   eccentricities (25 undirected, 49 forward and backward), and witnesses
   that attain their value — vertex 0, the min id, at output level All.
+* The structural operators (``degrees``, ``is_symmetric``,
+  ``is_transpose_of``, ``renumber_by_size``): schema, row count and
+  values; they have no tiers.
 * The other operators with a local kernel (both triangle counts, BFS,
   DFS, HyperBall) with ``local_mode`` True and False, and None on the
   empty graph: schema, row count, the same rows on every tier and the
@@ -25,18 +28,22 @@ from webgraph_algo_rs_spark.operators import (
     bfs_distances,
     connected_components,
     diameter_directed,
+    degrees,
     dfs_forest,
     diameter_undirected,
     directed_eccentricities,
     eccentricities,
     forward_eccentricities,
     hyperball,
+    is_symmetric,
+    is_transpose_of,
     label_propagation,
     pagerank,
     radius_diameter,
     radius_diameter_directed,
     radius_directed,
     radius_undirected,
+    renumber_by_size,
     triangle_count_global,
     triangle_count_per_vertex,
 )
@@ -48,11 +55,12 @@ GRAPHS = {
     "cycle50": [(i, (i + 1) % 50) for i in range(50)],
 }
 
-# tier -> the call options that select it
+# tier -> (call options, session conf) that select it: the edge count
+# alone picks persist-chain, so its leg lowers the size threshold
 TIERS = {
-    "local-csr": {"local_mode": True},
-    "blocked": {"local_mode": False},
-    "persist-chain": {"bucketize_edges": True},
+    "local-csr": ({"local_mode": True}, {}),
+    "blocked": ({"local_mode": False}, {}),
+    "persist-chain": ({}, {"wga.bucketizeMinEdges": "1"}),
 }
 
 OPS = {
@@ -70,11 +78,18 @@ def test_fixpoint_degenerate_inputs_agree_across_tiers(spark, op, graph):
     edges = edge_df(spark, arcs)
     vertices = {v for arc in arcs for v in arc}
     results = {}
-    for tier, opts in TIERS.items():
+    for tier, (opts, conf) in TIERS.items():
         stats: dict = {}
-        df = fn(edges, stats=stats, **opts)
+        for key, value in conf.items():
+            spark.conf.set(key, value)
+        try:
+            df = fn(edges, stats=stats, **opts)
+            rows = df.collect()
+        finally:
+            for key in conf:
+                spark.conf.unset(key)
         assert df.schema.simpleString() == f"struct<vertex:bigint,{col}:{typ}>"
-        results[tier] = {r["vertex"]: r[col] for r in df.collect()}
+        results[tier] = {r["vertex"]: r[col] for r in rows}
         assert set(results[tier]) == vertices, tier
         assert {"tier", "iterations", "wall_sec", metric} | extra <= set(stats), tier
         assert stats["tier"] == ("empty" if not arcs else tier)
@@ -100,6 +115,40 @@ def test_fixpoint_degenerate_inputs_agree_across_tiers(spark, op, graph):
             assert want == {v: v for v in vertices}
     if graph == "cycle50" and op == "cc":
         assert set(want.values()) == {0}
+
+
+def _transpose(arcs):
+    return [(v, u) for u, v in arcs]
+
+
+@pytest.mark.parametrize("graph", list(GRAPHS))
+def test_structural_ops_degenerate_inputs(spark, graph):
+    arcs = GRAPHS[graph]
+    edges = edge_df(spark, arcs)
+    vertices = sorted({v for arc in arcs for v in arc})
+
+    deg = degrees(edges)
+    assert deg.schema.simpleString() == (
+        "struct<vertex:bigint,out_degree:bigint,in_degree:bigint,"
+        "out_weight:double,in_weight:double>"
+    )
+    # every vertex here has exactly one out-arc and one in-arc
+    assert sorted(tuple(r) for r in deg.collect()) == [
+        (v, 1, 1, 1.0, 1.0) for v in vertices
+    ]
+
+    # the empty graph and the self-loops are their own transpose
+    symmetric = graph != "cycle50"
+    assert is_symmetric(edges) is symmetric
+    assert is_transpose_of(edges, edge_df(spark, _transpose(arcs))) is True
+    assert is_transpose_of(edges, edges) is symmetric
+
+    ranked = renumber_by_size(connected_components(edges))
+    assert ranked.schema.simpleString() == "struct<vertex:bigint,component:bigint>"
+    got = {r["vertex"]: r["component"] for r in ranked.collect()}
+    # one component per self-loop vertex, ranked by min id on the size
+    # tie; the cycle is one component
+    assert got == {v: (0 if graph == "cycle50" else v) for v in vertices}
 
 
 ECC_OPS = {

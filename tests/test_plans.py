@@ -10,7 +10,9 @@ table, falls back to per-row Python) fails CI, not the benchmark.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from tests.conftest import NINE, edge_df
 
@@ -166,3 +168,40 @@ def test_persist_chain_bounds_live_copies(spark):
     # checkpoints — every explicit persist handle is gone
     assert n_persisted() <= base + 1 + (8 + cut_every - 1) // cut_every
     assert final.agg(F.max("x")).collect()[0][0] == 8
+
+
+def test_failing_superstep_releases_pinned_state(spark, monkeypatch):
+    """A superstep that raises on the persist-chain tier must not leave
+    the pinned edge copy or the chain's last state handle cached for
+    the rest of the session."""
+    import webgraph_algo_rs_spark.plans.fixpoint as fixpoint
+    from webgraph_algo_rs_spark.operators.components import _Components
+    from webgraph_algo_rs_spark.plans.superstep import PersistChain
+
+    staged = []
+
+    class RecordingChain(PersistChain):
+        def stage(self, plan, step):
+            staged.append(super().stage(plan, step))
+            return staged[-1]
+
+    class FailingComponents(_Components):
+        steps = 0
+
+        def step(self, cur, prev):
+            self.steps += 1
+            if self.steps == 2:
+                raise RuntimeError("superstep 2 failed")
+            return super().step(cur, prev)
+
+    monkeypatch.setattr(fixpoint, "PersistChain", RecordingChain)
+    fp = FailingComponents()
+    spark.conf.set("wga.bucketizeMinEdges", "1")
+    try:
+        with pytest.raises(RuntimeError, match="superstep 2"):
+            fp.run(edge_df(spark, NINE), max_iter=10)
+    finally:
+        spark.conf.unset("wga.bucketizeMinEdges")
+    assert fp.tier == "persist-chain" and fp.steps == 2
+    assert fp.edges.storageLevel == StorageLevel.NONE
+    assert len(staged) == 1 and staged[0].storageLevel == StorageLevel.NONE

@@ -48,19 +48,20 @@ exec_mem = sys.argv[4]
 spark = get_spark(app_name="scal_iso", master=master,
                   shuffle_partitions=64,
                   extra_conf={{
-                      "spark.sql.warehouse.dir": "/tmp/spark-wh-scal-iso",
                       "spark.driver.memory": "8g",
                       # standalone default is a 1g executor heap no
                       # matter what the worker offers - size it to the
                       # local-cluster spec or the 157M-edge persist OOMs
                       "spark.executor.memory": exec_mem,
+                      # every run takes the persist-chain tier
+                      "wga.bucketizeMinEdges": "0",
                   }})
 edges = spark.read.parquet(edges_path)
 n_edges = edges.count()
-# warmup superstep: JIT + page cache + one-off bucketed-table write
-pagerank(edges, tol=0.0, max_iter=1, bucketize_edges=True)
+# warmup superstep: JIT + page cache
+pagerank(edges, tol=0.0, max_iter=1)
 stats = {{}}
-pagerank(edges, tol=0.0, max_iter=iters, stats=stats, bucketize_edges=True).count()
+pagerank(edges, tol=0.0, max_iter=iters, stats=stats).count()
 wall = stats["wall_sec"]
 print(json.dumps({{"master": master, "wall_sec": wall, "n_edges": n_edges,
                   "iters": stats["iterations"],

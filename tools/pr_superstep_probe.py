@@ -1,17 +1,22 @@
 """One-off physical-strategy probe for the big-graph PageRank superstep.
 
-Compares, on the committed 157M-edge scaling input at local[32], three
-edge-side storages for the scatter join (``state ⋈ edges ON src``):
+Compares, on the committed 157M-edge scaling input at local[32],
+physical strategies for the scatter join (``state ⋈ edges ON src``) over
+the normalized edge table ``repartition(64, src)`` +
+``persist(MEMORY_AND_DISK)``:
 
-  a) ``bucketed``  — the shipped path: bucketed+sorted parquet table,
-     zero-shuffle sort-merge join, but every superstep re-reads and
-     re-decodes the table from disk;
-  b) ``cached``    — the normalized edge table ``repartition(64, src)``
-     + ``persist(MEMORY_AND_DISK)``: scan from the block manager, but
-     the SMJ re-sorts 157M rows per superstep (cache keeps partitioning,
-     not ordering guarantees usable by SMJ? — that is what we measure);
-  c) ``cached_shj`` — same cache, ``preferSortMergeJoin=false`` so the
-     scatter is a shuffled hash join with the *state* as build side.
+  a) ``cached``     — sort-merge join: scan from the block manager, but
+     the SMJ re-sorts 157M rows per superstep;
+  b) ``cached_shj`` — ``preferSortMergeJoin=false``, so the scatter is a
+     shuffled hash join with the *state* as build side;
+  c) ``cached_hint`` — the same through a ``shuffle_hash`` hint on the
+     state side;
+  d) ``cached_int`` / ``cached_int_f32`` — the hash join over int32 ids
+     (and float32 weights): the bytes-per-edge probe.
+
+A bucketed+sorted ``saveAsTable`` store ran slower than ``cached``
+and ``cached_shj`` in the recorded run
+(``bench_logs/pr_superstep_probe_157m_r4.log``).
 
 Each variant runs the same hand-rolled superstep loop (scatter, gather,
 apply, L1-residual action per step) for ``iters`` steps after one
@@ -34,7 +39,6 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from webgraph_algo_rs_spark.session import get_spark
-from webgraph_algo_rs_spark.plans.superstep import bucketize
 
 N_BUCKETS = 64
 
@@ -90,7 +94,7 @@ def loop(spark, norm, vertices, n, iters: int, build_hint: bool = False) -> dict
 def main() -> None:
     edges_path = sys.argv[1]
     iters = int(sys.argv[2]) if len(sys.argv) > 2 else 4
-    variants = sys.argv[3:] or ["bucketed", "cached", "cached_shj", "cached_hint"]
+    variants = sys.argv[3:] or ["cached", "cached_shj", "cached_hint"]
     spark = get_spark(
         app_name="pr-probe",
         master="local[32]",
@@ -110,49 +114,42 @@ def main() -> None:
     print(json.dumps({"n_edges": n_edges, "n_vertices": n}), flush=True)
 
     for variant in variants:
-        if variant == "bucketed":
-            norm, drop = bucketize(
-                norm_edges_plan(edges), "src", N_BUCKETS, "wga_probe_edges"
-            )
-            res = loop(spark, norm, vertices, n, iters)
-            drop()
+        if variant == "cached_shj" or variant.startswith("cached_int"):
+            # narrow-id variants measure bytes-per-edge under the
+            # same (winning) shuffled-hash-join physical strategy
+            spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
         else:
-            if variant == "cached_shj" or variant.startswith("cached_int"):
-                # narrow-id variants measure bytes-per-edge under the
-                # same (winning) shuffled-hash-join physical strategy
-                spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-            else:
-                spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-            norm_plan = norm_edges_plan(edges)
-            verts = vertices
-            if variant.startswith("cached_int"):
-                # bytes-per-edge probe for the DRAM-bound 8->32 plateau:
-                # dense ids < 2^31 fit int32 (edge row 24B -> 16B; with
-                # float32 weights -> 12B). Both join sides narrowed so
-                # hash co-partitioning stays consistent.
-                max_id = vertices.agg(F.max("vertex")).first()[0]
-                assert max_id < 2**31, (
-                    f"cached_int* probe needs ids < 2^31, got max {max_id}: "
-                    "the non-ANSI int cast would silently wrap"
-                )
-                nw_t = "float" if variant.endswith("f32") else "double"
-                norm_plan = norm_plan.select(
-                    F.col("src").cast("int").alias("src"),
-                    F.col("dst").cast("int").alias("dst"),
-                    F.col("nw").cast(nw_t).alias("nw"),
-                )
-                verts = vertices.select(F.col("vertex").cast("int").alias("vertex"))
-            norm = (
-                norm_plan
-                .repartition(N_BUCKETS, "src")
-                .persist(StorageLevel.MEMORY_AND_DISK)
+            spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
+        norm_plan = norm_edges_plan(edges)
+        verts = vertices
+        if variant.startswith("cached_int"):
+            # bytes-per-edge probe for the DRAM-bound 8->32 plateau:
+            # dense ids < 2^31 fit int32 (edge row 24B -> 16B; with
+            # float32 weights -> 12B). Both join sides narrowed so
+            # hash co-partitioning stays consistent.
+            max_id = vertices.agg(F.max("vertex")).first()[0]
+            assert max_id < 2**31, (
+                f"cached_int* probe needs ids < 2^31, got max {max_id}: "
+                "the non-ANSI int cast would silently wrap"
             )
-            norm.count()
-            res = loop(
-                spark, norm, verts, n, iters,
-                build_hint=(variant == "cached_hint"),
+            nw_t = "float" if variant.endswith("f32") else "double"
+            norm_plan = norm_plan.select(
+                F.col("src").cast("int").alias("src"),
+                F.col("dst").cast("int").alias("dst"),
+                F.col("nw").cast(nw_t).alias("nw"),
             )
-            norm.unpersist()
+            verts = vertices.select(F.col("vertex").cast("int").alias("vertex"))
+        norm = (
+            norm_plan
+            .repartition(N_BUCKETS, "src")
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        norm.count()
+        res = loop(
+            spark, norm, verts, n, iters,
+            build_hint=(variant == "cached_hint"),
+        )
+        norm.unpersist()
         res.update(
             variant=variant,
             eps=round(n_edges * iters / res["wall"]) if res["wall"] else None,

@@ -8,8 +8,8 @@ library), re-expressed Spark-first:
   derived from multi-turn transcript tables (or any arc list);
 * iterative algorithms (PageRank, connected components, label
   propagation, HyperBall) are **driver-loop supersteps** — DataFrame
-  joins + partial-aggregated shuffles, with delta frontiers, two-level
-  salting for hot vertices and per-iteration checkpointing;
+  joins + partial-aggregated shuffles, with delta frontiers and
+  per-iteration checkpointing;
 * heavy per-row math (HLL register merges, cosine kernels) runs in
   **vectorized Arrow/pandas UDFs**, never per-row Python.
 

@@ -48,11 +48,7 @@ class _Components(Fixpoint):
         return cc_kernel(max_iter)
 
     def prepare(self, edges, n_edges):
-        # the pin probe counts the raw scan, not the symmetrize plan:
-        # limit() cannot short-circuit through symmetrize's groupBy, and
-        # the ≤2× raw undercount only shifts a near-threshold pick onto
-        # the spill-safe cached store
-        self.edges = self.pin(symmetrize(edges).select(SRC, DST), probe_df=edges)
+        self.edges = self.pin(symmetrize(edges).select(SRC, DST))
         return graph_vertices(self.edges).select(
             "vertex", F.col("vertex").alias("label"), F.lit(True).alias("changed")
         )
@@ -85,22 +81,19 @@ def connected_components(
     max_iter: int = 10_000,
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
-    bucketize_edges: bool = False,
     local_mode: bool | None = None,
-    edge_store: str = "auto",
 ) -> DataFrame:
     """Returns ``(vertex:bigint, component:bigint)`` on the symmetrized graph.
 
-    Tiers, ``bucketize_edges``, ``local_mode``, ``checkpoint`` and
-    ``stats`` are the fixpoint driver's (``plans/fixpoint.py``; the
-    delta frontier rides along as the carried ``changed`` column); the
-    stop rule is the first superstep with zero label changes. ``stats`` also records
-    ``bucketized`` (the persist-chain tier ran). ``edge_store`` selects
-    the pinned edge store on the persist-chain tier (``pin_edges``).
+    Tiers, ``local_mode``, ``checkpoint`` and ``stats`` are the fixpoint
+    driver's (``plans/fixpoint.py``; the delta frontier rides along as
+    the carried ``changed`` column); the stop rule is the first
+    superstep with zero label changes. ``stats`` also records
+    ``bucketized`` (the persist-chain tier ran).
     Exact: min-label exchange is ordering-insensitive integer math.
     """
-    fp = _Components(edge_store)
-    out = fp.run(edges, max_iter, checkpoint, stats, bucketize_edges, local_mode)
+    fp = _Components()
+    out = fp.run(edges, max_iter, checkpoint, stats, local_mode)
     if stats is not None:
         stats["bucketized"] = fp.tier == "persist-chain"
     return out

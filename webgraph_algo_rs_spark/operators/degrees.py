@@ -1,7 +1,8 @@
 """Degree tables — the engine's analog of the reference's DCF
 (cumulative outdegree function, ``/root/reference/src/main.rs:50``)
-used there for arc-balanced work splitting; here the degree table feeds
-skew decisions (hot-vertex sets for salting) and is a query in itself.
+used there for arc-balanced work splitting; here the degree table is a
+query in itself (hub skew is left to AQE and map-side partial
+aggregation, see ``plans/superstep.py``).
 """
 
 from __future__ import annotations
@@ -33,12 +34,3 @@ def degrees(edges: DataFrame) -> DataFrame:
         )
     )
 
-
-def hot_vertices(edges: DataFrame, threshold: int) -> DataFrame:
-    """Vertices with in-degree above ``threshold`` — the salting hot set."""
-    return (
-        edges.groupBy(F.col(DST).alias("vertex"))
-        .agg(F.count(F.lit(1)).alias("in_degree"))
-        .filter(F.col("in_degree") > threshold)
-        .select("vertex")
-    )

@@ -131,7 +131,6 @@ class _HyperBall(Fixpoint):
     stats_reset_every = 8
 
     def __init__(self, params, rel_threshold, discount, node_weights):
-        super().__init__()
         self.params, self.rel_threshold = params, rel_threshold
         self.discount, self.node_weights = discount, node_weights
         self.schema = (
@@ -204,8 +203,7 @@ class _HyperBall(Fixpoint):
         self.arcs = self.pin(
             edges.filter(F.col(SRC) != F.col(DST))
             .select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-            .distinct(),
-            probe_df=edges,
+            .distinct()
         )
         # vertex set from the raw edges: a vertex with only self-loops
         # still has a ball {v} (reference counts it)

@@ -41,8 +41,7 @@ class _LabelPropagation(Fixpoint):
         return lpa_kernel(max_iter)
 
     def prepare(self, edges, n_edges):
-        # probe the raw scan (see components.py)
-        self.edges = self.pin(symmetrize(edges), probe_df=edges)
+        self.edges = self.pin(symmetrize(edges))
         return graph_vertices(self.edges).select(
             "vertex", F.col("vertex").alias("label")
         )
@@ -78,19 +77,13 @@ def label_propagation(
     max_iter: int = 20,
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
-    bucketize_edges: bool = False,
     local_mode: bool | None = None,
-    edge_store: str = "auto",
 ) -> DataFrame:
     """Returns ``(vertex:bigint, label:bigint)``.
 
-    Tiers, ``bucketize_edges``, ``local_mode``, ``checkpoint`` and
-    ``stats`` are the fixpoint driver's (``plans/fixpoint.py``); the
-    stop rule is the first superstep with zero label changes, or
-    ``max_iter``. ``edge_store`` selects the pinned edge store on the
-    persist-chain tier (``pin_edges``). Integer-weight tallies are
-    bit-exact vs the local kernel.
+    Tiers, ``local_mode``, ``checkpoint`` and ``stats`` are the fixpoint
+    driver's (``plans/fixpoint.py``); the stop rule is the first
+    superstep with zero label changes, or ``max_iter``. Integer-weight
+    tallies are bit-exact vs the local kernel.
     """
-    return _LabelPropagation(edge_store).run(
-        edges, max_iter, checkpoint, stats, bucketize_edges, local_mode
-    )
+    return _LabelPropagation().run(edges, max_iter, checkpoint, stats, local_mode)

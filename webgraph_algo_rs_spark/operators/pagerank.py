@@ -49,8 +49,7 @@ class _PageRank(Fixpoint):
     metric_type = "double"
     unset = float("inf")
 
-    def __init__(self, damping: float, tol: float, edge_store: str):
-        super().__init__(edge_store)
+    def __init__(self, damping: float, tol: float):
         self.damping, self.tol = damping, tol
         self.n = None
 
@@ -70,7 +69,7 @@ class _PageRank(Fixpoint):
             F.lit(1.0 / n).alias("rank"),
         )
         if self.tier == "persist-chain":
-            self.edges = self.pin(norm_plan, probe_df=edges)
+            self.edges = self.pin(norm_plan)
             return base
         # small-graph partition sizing: checkpointed frames pin their
         # map-side partition count, and 32 tasks per stage on a 40k-edge
@@ -79,7 +78,7 @@ class _PageRank(Fixpoint):
         # 10M-edge graph must not collapse its scan to one task) — the
         # probe is exact on this tier and the normalize join preserves rows.
         p = min(self.n_buckets, max(n, n_edges) // 20_000 + 1)
-        self.edges = self.pin(norm_plan.coalesce(p), probe_df=edges)
+        self.edges = self.pin(norm_plan.coalesce(p))
         return base.coalesce(min(self.n_buckets, n // 20_000 + 1))
 
     def step(self, cur, prev):
@@ -124,9 +123,7 @@ def pagerank(
     max_iter: int = 200,
     checkpoint: CheckpointManager | None = None,
     stats: dict | None = None,
-    bucketize_edges: bool = False,
     local_mode: bool | None = None,
-    edge_store: str = "auto",
 ) -> DataFrame:
     """Returns ``(vertex:bigint, rank:double)``; ranks sum to 1.
 
@@ -134,17 +131,15 @@ def pagerank(
     call with the same manager continues where a killed run committed).
     ``stats``: optional dict populated with tier/iterations/residual/
     wall_sec and ``n_vertices``.
-    ``bucketize_edges``: take the persist-chain big-graph tier.
     ``local_mode``: ``True`` forces the partition-local CSR kernel,
     ``False`` forbids it, ``None`` auto-picks it under
-    ``wga.localKernelMaxEdges`` edges.
-    ``edge_store``: physical store of the pinned edge table on the
-    big-graph tier — ``"cached"`` / ``"table"`` / ``"auto"`` (see
-    :func:`~webgraph_algo_rs_spark.plans.superstep.pin_edges`).
+    ``wga.localKernelMaxEdges`` edges. Above ``wga.bucketizeMinEdges``
+    edges the run takes the persist-chain big-graph tier
+    (``plans/fixpoint.py``).
     """
-    fp = _PageRank(damping, tol, edge_store)
+    fp = _PageRank(damping, tol)
     edges = edges.select(SRC, DST, W)
-    out = fp.run(edges, max_iter, checkpoint, stats, bucketize_edges, local_mode)
+    out = fp.run(edges, max_iter, checkpoint, stats, local_mode)
     if stats is not None:
         stats["n_vertices"] = fp.n if fp.n is not None else out.count()
     return out

@@ -13,25 +13,27 @@ a local kernel; this module adds the two superstep tiers:
 
 * ``empty`` — the edge table has no rows; nothing runs.
 * ``local-csr`` — at most ``min(local edge cap,
-  wga.bucketizeMinEdges)`` edges and no checkpoint or
-  ``bucketize_edges`` requested: the whole loop runs inside one
-  Arrow-batched task. ``local_mode=True`` forces it. The local edge cap
-  is ``wga.localKernelMaxEdges``; an operator whose superstep moves more
-  than one row's worth of bytes per edge scales it down
-  (:meth:`Fixpoint.local_cap`).
+  wga.bucketizeMinEdges)`` edges and no checkpoint requested: the whole
+  loop runs inside one Arrow-batched task. ``local_mode=True`` forces
+  it. The local edge cap is ``wga.localKernelMaxEdges``; an operator
+  whose superstep moves more than one row's worth of bytes per edge
+  scales it down (:meth:`Fixpoint.local_cap`).
 * ``blocked`` — supersteps as DataFrame joins, each staged by
   ``materialize`` (an eager ``localCheckpoint``).
-* ``persist-chain`` — above ``wga.bucketizeMinEdges`` edges (or with
-  ``bucketize_edges``): the edge side is pinned on ``src`` once
-  (``pin_edges``) and states rotate through a :class:`PersistChain`, so
-  exactly two state copies are ever live. The blocked tier's
-  ``localCheckpoint`` copies wait for the ContextCleaner's GC, a race it
-  loses at 10⁸ edges (measured OOM at 157M edges / 28g heap). Only
-  ``local_mode=True`` keeps a graph of that size off this tier.
+* ``persist-chain`` — above ``wga.bucketizeMinEdges`` edges: the edge
+  side is hash-partitioned on ``src`` and persisted once
+  (:meth:`Fixpoint.pin`) and states rotate through a
+  :class:`PersistChain`, so exactly two state copies are ever live. The
+  blocked tier's ``localCheckpoint`` copies wait for the
+  ContextCleaner's GC, a race it loses at 10⁸ edges (measured OOM at
+  157M edges / 28g heap). Only ``local_mode=True`` keeps a graph of that
+  size off this tier.
 
-One capped ``probe_edge_count`` decides all four: it never scans more
-than ``wga.bucketizeMinEdges + 1`` rows (one row when ``local_mode=True``
-or ``bucketize_edges`` already fixes the tier).
+The edge count alone picks the tier: one capped ``probe_edge_count``
+decides all four and never scans more than ``wga.bucketizeMinEdges + 1``
+rows (one row when ``local_mode=True``). The pinned edges, the chain's
+last state handle and the stats-firewall spill are released when the
+run ends, also when a superstep raises.
 
 **Supersteps.** Both superstep tiers run one superstep per Spark action:
 the state frame holds the key columns and each carried column suffixed
@@ -74,12 +76,13 @@ import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from webgraph_algo_rs_spark.checkpoint import CheckpointManager
 from webgraph_algo_rs_spark.plans.local_csr import (
-    bucketize_min_edges,
     local_dispatch,
     local_kernel_threshold,
+    persist_chain_min_edges,
     run_local_kernel,
 )
 from webgraph_algo_rs_spark.plans.superstep import (
@@ -89,7 +92,6 @@ from webgraph_algo_rs_spark.plans.superstep import (
     PersistChain,
     StatsResetter,
     materialize,
-    pin_edges,
 )
 
 
@@ -125,12 +127,9 @@ class Fixpoint:
     unset: float = -1  # the stop metric before any superstep ran
     with_weight = True  # the local kernel reads the weight column
     stats_reset_every = 0  # stats firewall cadence in supersteps; 0 = off
-
-    def __init__(self, edge_store: str = "auto"):
-        self.edge_store = edge_store
-        self.tier = ""
-        self.n_buckets = 0
-        self._release = None
+    tier = ""  # set per call by dispatch
+    n_buckets = 0  # spark.sql.shuffle.partitions on the superstep tiers
+    _pinned: DataFrame | None = None  # the persisted edge side
 
     def local_cap(self, spark) -> int:
         """The auto local-CSR edge cap: ``wga.localKernelMaxEdges``."""
@@ -148,53 +147,45 @@ class Fixpoint:
         self,
         edges: DataFrame,
         checkpoint: CheckpointManager | None,
-        bucketize_edges: bool,
         local_mode: bool | None,
     ) -> tuple[str, int]:
         """``(tier, probed edge count)`` for one call (module docstring);
         the count is exact on the ``blocked`` tier. ``local_dispatch``
         makes the ``empty`` / ``local-csr`` choice (auto only without a
-        checkpoint or ``bucketize_edges``, and never above
-        ``wga.bucketizeMinEdges``); the same probe, scanned up to
-        ``wga.bucketizeMinEdges``, picks ``blocked`` or ``persist-chain``."""
-        if local_mode and (checkpoint is not None or bucketize_edges):
+        checkpoint, and never above ``wga.bucketizeMinEdges``); the same
+        probe, scanned up to ``wga.bucketizeMinEdges``, picks ``blocked``
+        or ``persist-chain``."""
+        if local_mode and checkpoint is not None:
             # an explicit force must not be silently overridden: the local
             # kernel runs the whole loop inside one task, so per-superstep
-            # durable checkpoints / pinned edge buckets cannot apply to it
-            raise ValueError(
-                "local_mode=True cannot be combined with "
-                + ("checkpoint" if checkpoint is not None else "bucketize_edges")
-            )
+            # durable checkpoints cannot apply to it
+            raise ValueError("local_mode=True cannot be combined with checkpoint")
         spark = edges.sparkSession
-        big_thr = bucketize_min_edges(spark)
+        big_thr = persist_chain_min_edges(spark)
         tier, n_edges = local_dispatch(
             edges,
             local_mode,
             cap=min(self.local_cap(spark), big_thr),
-            auto=checkpoint is None and not bucketize_edges,
-            probe_to=0 if bucketize_edges else big_thr,
+            auto=checkpoint is None,
+            probe_to=big_thr,
         )
         if tier is not None:
             return tier, n_edges
-        if bucketize_edges or n_edges > big_thr:
-            return "persist-chain", n_edges
-        return "blocked", n_edges
+        return ("persist-chain" if n_edges > big_thr else "blocked"), n_edges
 
-    def pin(self, plan: DataFrame, probe_df: DataFrame) -> DataFrame:
-        """The step's constant edge side: pinned on ``src`` on the
-        persist-chain tier (``pin_edges``; ``probe_df`` is the raw scan
-        its store probe counts), materialized otherwise."""
+    def pin(self, plan: DataFrame) -> DataFrame:
+        """The step's constant edge side: on the persist-chain tier
+        hash-partitioned on ``src`` and persisted (``MEMORY_AND_DISK``,
+        one ``count``), so each superstep's scatter join shuffles only
+        the state and scans the edges from the block manager; the run
+        releases it when it ends. Materialized otherwise."""
         if self.tier != "persist-chain":
             return materialize(plan)
-        pinned, self._release = pin_edges(
-            plan,
-            SRC,
-            n_buckets=self.n_buckets,
-            table_name=f"wga_{self.algo}_edges",
-            store=self.edge_store,
-            probe_df=probe_df,
+        self._pinned = plan.repartition(self.n_buckets, SRC).persist(
+            StorageLevel.MEMORY_AND_DISK
         )
-        return pinned
+        self._pinned.count()
+        return self._pinned
 
     def run(
         self,
@@ -202,13 +193,12 @@ class Fixpoint:
         max_iter: int,
         checkpoint: CheckpointManager | None = None,
         stats: dict | None = None,
-        bucketize_edges: bool = False,
         local_mode: bool | None = None,
     ) -> DataFrame:
         """The result frame at the fixpoint or after ``max_iter``
         supersteps (module docstring)."""
         spark = edges.sparkSession
-        self.tier, n_edges = self.dispatch(edges, checkpoint, bucketize_edges, local_mode)
+        self.tier, n_edges = self.dispatch(edges, checkpoint, local_mode)
         t0 = time.time()
         if self.tier == "empty":
             self._record(stats, 0, 0, 0.0)
@@ -225,24 +215,25 @@ class Fixpoint:
             return out.drop("iterations", self.metric)
 
         self.n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        initial = self.prepare(edges, n_edges)
-        start, history, last = 0, [], None
-        resumed = checkpoint.latest(spark) if checkpoint is not None else None
-        if resumed is None:
-            state = materialize(initial)
-        else:
-            snap_df, snap = resumed
-            state = materialize(snap_df.select(*self.keys, *self.carried))
-            start, history, last = snap.iteration + 1, list(snap.history), snap.metrics
         chain = None
         if self.tier == "persist-chain":
             chain = PersistChain("vertex", self.n_buckets)
-            state = chain.seed(state)
-        cur = self._select(state, "", 0)
         spill = StatsResetter(self.algo)
-        t_loop = time.time()
-        it = start
         try:
+            initial = self.prepare(edges, n_edges)
+            start, history, last = 0, [], None
+            resumed = checkpoint.latest(spark) if checkpoint is not None else None
+            if resumed is None:
+                state = materialize(initial)
+            else:
+                snap_df, snap = resumed
+                state = materialize(snap_df.select(*self.keys, *self.carried))
+                start, history, last = snap.iteration + 1, list(snap.history), snap.metrics
+            if chain is not None:
+                state = chain.seed(state)
+            cur = self._select(state, "", 0)
+            t_loop = time.time()
+            it = start
             while it < max_iter and not (last is not None and self.converged(last)):
                 t_step = time.time()
                 cur = self.step(cur, last)
@@ -265,13 +256,14 @@ class Fixpoint:
 
             result = self.result(self._select(cur, 0, ""))
             if chain is not None:
-                # pins the result off the chain and off the pinned edge
-                # table, which a later run may overwrite
+                # pins the result off the chain and off the pinned edges
                 result = chain.finish(result)
         finally:
             spill.close()
-        if self._release is not None:
-            self._release()
+            if chain is not None:
+                chain.release()
+            if self._pinned is not None:
+                self._pinned.unpersist()
         self._record(
             stats,
             it - start,

@@ -53,38 +53,40 @@ from webgraph_algo_rs_spark.plans.superstep import SRC, DST, W, materialize
 
 LOCAL_KERNEL_MAX_EDGES_CONF = "wga.localKernelMaxEdges"
 LOCAL_KERNEL_MAX_EDGES_DEFAULT = 8_000_000
+PERSIST_CHAIN_MIN_EDGES_CONF = "wga.bucketizeMinEdges"
+PERSIST_CHAIN_MIN_EDGES_DEFAULT = 32_000_000
+
+
+def _int_conf(spark, key: str, default: int) -> int:
+    """Session conf ``key`` as an int (``default`` when unset); a value
+    that is not an integer literal raises ``ValueError`` naming both."""
+    value = spark.conf.get(key, None)
+    if value is None:
+        return default
+    try:
+        return int(value)
+    except ValueError:
+        raise ValueError(f"conf {key} must be an integer, got {value!r}") from None
 
 
 def local_kernel_threshold(spark) -> int:
     """Max edge count eligible for the local-CSR path (session conf
     ``wga.localKernelMaxEdges``; set 0 to disable auto-dispatch)."""
-    try:
-        return int(
-            spark.conf.get(LOCAL_KERNEL_MAX_EDGES_CONF, str(LOCAL_KERNEL_MAX_EDGES_DEFAULT))
-        )
-    except (TypeError, ValueError):
-        return LOCAL_KERNEL_MAX_EDGES_DEFAULT
+    return _int_conf(spark, LOCAL_KERNEL_MAX_EDGES_CONF, LOCAL_KERNEL_MAX_EDGES_DEFAULT)
 
 
-BUCKETIZE_MIN_EDGES_CONF = "wga.bucketizeMinEdges"
-BUCKETIZE_MIN_EDGES_DEFAULT = 32_000_000
-
-
-def bucketize_min_edges(spark) -> int:
+def persist_chain_min_edges(spark) -> int:
     """Edge count above which auto-dispatch upgrades an iterative
-    operator to its big-graph persist-chain path (session conf
+    operator to its big-graph persist-chain tier (session conf
     ``wga.bucketizeMinEdges``): the mid-size blocked-localCheckpoint
     loop retains state copies until the ContextCleaner's weak-ref GC
     frees them, which loses the race on 10⁸-edge graphs (measured OOM at
-    157M edges / 28g heap, round 4). The three-tier size dispatch is
-    local-CSR ≤ ``wga.localKernelMaxEdges`` < blocked supersteps ≤ this
-    < persist-chain bucketized."""
-    try:
-        return int(
-            spark.conf.get(BUCKETIZE_MIN_EDGES_CONF, str(BUCKETIZE_MIN_EDGES_DEFAULT))
-        )
-    except (TypeError, ValueError):
-        return BUCKETIZE_MIN_EDGES_DEFAULT
+    157M edges / 28g heap, round 4). The size dispatch is local-CSR ≤
+    ``wga.localKernelMaxEdges`` < blocked supersteps ≤ this <
+    persist-chain (edges pinned in the block manager)."""
+    return _int_conf(
+        spark, PERSIST_CHAIN_MIN_EDGES_CONF, PERSIST_CHAIN_MIN_EDGES_DEFAULT
+    )
 
 
 def probe_edge_count(edges: DataFrame, threshold: int) -> int:

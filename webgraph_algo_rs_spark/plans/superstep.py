@@ -17,28 +17,25 @@ delta-iteration (``:784-799``). Our Spark analogs, in order:
   R-MAT graph, so there is no salting layer;
 * **systolic / delta iteration** → algorithms keep a ``changed`` flag
   and scatter only from the delta frontier.
+* **constant edge side** → on the big-graph tier the edge table is
+  hash-partitioned on ``src`` and kept in the block manager once per
+  call (``Fixpoint.pin`` in ``plans/fixpoint.py``), so each superstep's
+  scatter join shuffles only the state; the states rotate through
+  :class:`PersistChain`.
 
 Everything here is DataFrame-only; no RDDs, no per-row Python.
 """
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import tempfile
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SRC, DST, W = "src_vertex", "dst_vertex", "weight"
-
-# per-process sequence for bucketized-table names: two runs in one
-# session (or two processes sharing a warehouse dir) must never clobber
-# each other's bucketed edge tables mid-algorithm
-_BUCKET_SEQ = itertools.count()
-
 
 def materialize(df: DataFrame) -> DataFrame:
     """Cut lineage and pin the current state (eager localCheckpoint).
@@ -172,153 +169,6 @@ def undirected_canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def _warehouse_path(spark) -> str | None:
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if not wh:
-        return None
-    from urllib.parse import urlparse
-
-    return urlparse(wh).path or wh
-
-
-def _sweep_stale_buckets(spark, base: str) -> None:
-    """Remove orphan bucketed-table dirs left by *dead* processes.
-
-    Each bucketized run embeds its pid in the table name; a crashed run
-    can't drop its own table, so every new run garbage-collects peers
-    whose pid no longer exists. Live processes are never touched."""
-    loc = _warehouse_path(spark)
-    if not loc:
-        return
-    import re
-
-    pat = re.compile(re.escape(base) + r"_(\d+)_\d+$")
-    try:
-        entries = os.listdir(loc)
-    except OSError:
-        return
-    for name in entries:
-        m = pat.match(name)
-        if not m or int(m.group(1)) == os.getpid():
-            continue
-        try:
-            os.kill(int(m.group(1)), 0)
-        except ProcessLookupError:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-            shutil.rmtree(os.path.join(loc.rstrip("/"), name), ignore_errors=True)
-        except PermissionError:
-            pass  # pid alive under another uid — leave it
-
-
-def bucketize(
-    df: DataFrame,
-    key: str,
-    n_buckets: int = 64,
-    table_name: str = "wga_bucketed_edges",
-) -> tuple[DataFrame, Callable[[], None]]:
-    """Persist ``df`` as a bucketed+sorted table on ``key`` and read it
-    back, so iterative joins shuffle only the *state* side.
-
-    The hot loop of every fixpoint algorithm joins a small, changing
-    state table against a huge, constant edge table. Without bucketing,
-    Catalyst re-shuffles (or worse, re-broadcasts) the edge table every
-    superstep; with a bucketed scan its output partitioning is known, so
-    each superstep moves only the state rows — the dominant cost at
-    10^12-edge scale drops from O(edges) to O(vertices) bytes shuffled
-    per iteration. On a production cluster this is the Iceberg
-    bucket-partitioned edge table; ``saveAsTable`` is the local-mode
-    equivalent. Write cost is paid once and amortized over all
-    iterations.
-
-    Returns ``(table_df, drop)``: call ``drop()`` once the algorithm has
-    materialized its result off the table's lineage — the scratch table
-    is per-run state, not an output, and a 157M-edge run otherwise leaks
-    a full normalized edge copy in the warehouse dir per invocation.
-    """
-    spark = df.sparkSession
-    base = table_name
-    _sweep_stale_buckets(spark, base)
-    # unique physical name per call: pid guards cross-process warehouse
-    # sharing, the counter guards interleaved runs in one session
-    table_name = f"{base}_{os.getpid()}_{next(_BUCKET_SEQ)}"
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    # the in-memory catalog forgets tables across sessions but their
-    # files survive in the warehouse dir; remove orphan locations or the
-    # write fails with LOCATION_ALREADY_EXISTS
-    loc = _warehouse_path(spark)
-    if loc:
-        shutil.rmtree(f"{loc.rstrip('/')}/{table_name}", ignore_errors=True)
-    df.write.bucketBy(n_buckets, key).sortBy(key).mode("overwrite").saveAsTable(
-        table_name
-    )
-
-    def drop() -> None:
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-        if loc:
-            shutil.rmtree(f"{loc.rstrip('/')}/{table_name}", ignore_errors=True)
-
-    return spark.table(table_name), drop
-
-
-def pin_edges(
-    df: DataFrame,
-    key: str,
-    n_buckets: int = 64,
-    table_name: str = "wga_bucketed_edges",
-    store: str = "auto",
-    probe_df: DataFrame | None = None,
-) -> tuple[DataFrame, Callable[[], None]]:
-    """Pin the constant edge side of a fixpoint loop on ``key`` so each
-    superstep shuffles only the state. Two physical stores:
-
-    * ``"cached"`` — ``repartition(n_buckets, key)`` + block-manager
-      persist (``MEMORY_AND_DISK``). The scatter join is still
-      exchange-free on the edge side, and every superstep scans the
-      edges from executor memory instead of re-reading + re-decoding
-      parquet. The join becomes a per-superstep sort (SMJ) or hash
-      build (SHJ) of in-memory rows — measured faster than the bucketed
-      scan whenever the edges actually fit (probe:
-      ``tools/pr_superstep_probe.py``).
-    * ``"table"`` — bucketed+sorted table via :func:`bucketize`: the
-      10^12-edge path, where no cluster holds the edges in RAM and the
-      pre-sorted buckets let every superstep's SMJ skip the edge-side
-      sort entirely.
-    * ``"auto"`` — ``cached`` when the edge count probes at or under
-      ``wga.cachedEdgesMaxEdges`` (default 1e9 — ~50 GB of (long, long,
-      double) rows across a cluster's block managers; far below any
-      100 TB corpus, far above every single-node benchmark), else
-      ``table``. The probe is a ``limit(thr+1).count()`` — over
-      ``probe_df`` when given (callers pass the raw scan when ``df``
-      itself is a row-preserving join plan) — so the decision never
-      scans more than the threshold.
-
-    Returns ``(edges_df, release)``; call ``release()`` after the
-    result is materialized off the edge table's lineage.
-    """
-    if store == "auto":
-        try:
-            thr = int(
-                df.sparkSession.conf.get("wga.cachedEdgesMaxEdges", "1000000000")
-            )
-        except (TypeError, ValueError):
-            thr = 1_000_000_000
-        store = (
-            "cached"
-            if (probe_df if probe_df is not None else df).limit(thr + 1).count()
-            <= thr
-            else "table"
-        )
-    if store == "table":
-        return bucketize(df, key, n_buckets, table_name)
-    if store != "cached":
-        raise ValueError(f"unknown edge store {store!r}")
-    from pyspark.storagelevel import StorageLevel
-
-    pinned = df.repartition(n_buckets, key).persist(StorageLevel.MEMORY_AND_DISK)
-    pinned.count()
-    return pinned, lambda: pinned.unpersist()
-
-
 class PersistChain:
     """Explicit persisted-handle rotation for big-graph fixpoint loops —
     the persist-chain tier of ``plans/fixpoint.py``. ``materialize``
@@ -335,13 +185,16 @@ class PersistChain:
     Usage::
 
         chain = PersistChain("vertex", n_buckets)
-        state = chain.seed(state)
-        for it in ...:
-            stepped = chain.stage(stepped_plan, it)
-            changed = stepped.filter("changed").count()   # caller action
-            chain.advance(stepped)
-            state = stepped
-        return chain.finish(state.select(...))
+        try:
+            state = chain.seed(state)
+            for it in ...:
+                stepped = chain.stage(stepped_plan, it)
+                changed = stepped.filter("changed").count()   # caller action
+                chain.advance(stepped)
+                state = stepped
+            return chain.finish(state.select(...))
+        finally:
+            chain.release()
     """
 
     def __init__(self, key: str, n_buckets: int, cut_every: int = 4):
@@ -381,10 +234,15 @@ class PersistChain:
         self._prev = staged
 
     def finish(self, result: DataFrame) -> DataFrame:
-        """Pin ``result`` off the chain (and off any scratch edge table
-        a later run may overwrite), then release the last handle."""
+        """Pin ``result`` off the chain (and off the pinned edges, which
+        the caller releases next), then release the last handle."""
         out = materialize(result)
+        self.release()
+        return out
+
+    def release(self) -> None:
+        """Release the last handle; a no-op after :meth:`finish`. A loop
+        that raises calls this (in a ``finally``) instead of ``finish``."""
         if self._prev is not None:
             self._prev.unpersist()
             self._prev = None
-        return out
